@@ -11,7 +11,13 @@ Neo4j+NetworkX.
 
 All functions are thin compositions over ``catalog`` edge views and
 ``functions/graph_algos`` — no new execution logic, so everything inherits
-the engine's oracle-tested semantics and scale posture.
+the engine's oracle-tested semantics and scale posture. The one exception
+is the interactive pair :func:`expand_neighborhood` and :func:`ubo_report`:
+on a hierarchy within ``graph_snapshot.MAX_EDGES`` edges they answer from a
+driver-side snapshot of the same edge view (``functions/graph_snapshot.py``)
+and start no Spark job once it is built; the Spark path stays the scale path
+above the gate and the reference the tests hold the snapshot to.
+:func:`export_graph_viz` always runs on Spark.
 """
 
 from __future__ import annotations
@@ -20,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mimranalytics_core_spark import catalog
+from mimranalytics_core_spark.functions import graph_snapshot
 from mimranalytics_core_spark.functions.graph_algos import (
     betweenness,
     bfs_distances,
@@ -35,24 +42,57 @@ def expand_neighborhood(
     spark: SparkSession, sf_dir: str, entities: list[str], hops: int = 2
 ) -> DataFrame:
     """Interactive relationship expansion (README.md:11): the ≤k-hop
-    undirected neighborhood of a seed entity set → (node, hop)."""
+    undirected neighborhood of a seed entity set → (node, hop).
+
+    Gated: while the hierarchy has at most ``graph_snapshot.MAX_EDGES``
+    (250,000) edges, counted from the parquet footers without a job, the
+    answer comes from the driver-side snapshot's adjacency. That adjacency
+    is built once per (session, sf_dir) by one ``toArrow()`` and dropped by
+    ``catalog.clear_view_cache()``. At the gate the whole snapshot holds
+    about 75 MiB. The answer is a job-free local frame ordered by
+    (hop, node). Above the gate, or when the count is unknown, the Spark BFS
+    below runs. Both give the same rows and schema."""
     tables(spark, sf_dir)
+    gated = graph_snapshot.expand(spark, sf_dir, entities, hops)
+    if gated is not None:
+        return gated
     edges = undirect(catalog.hierarchy_edges(spark, sf_dir))
     seeds = spark.createDataFrame([(e,) for e in entities], "node STRING")
     return bfs_distances(edges, seeds, max_depth=hops).withColumnRenamed("dist", "hop")
+
+
+def _owner_closure(
+    spark: SparkSession, sf_dir: str, max_depth: int, threshold: float
+) -> DataFrame:
+    """``ubo_closure`` over the hierarchy, restricted to customer owners."""
+    edges = catalog.hierarchy_edges(spark, sf_dir)
+    owners = edges.filter(F.col("rel_type") == "customer_of").select("src").distinct()
+    ubo = ubo_closure(edges, max_depth=max_depth, threshold=threshold)
+    return ubo.join(owners, ubo.owner == owners.src, "left_semi")
 
 
 def ubo_report(
     spark: SparkSession, sf_dir: str, threshold: float = 0.25, max_depth: int = 6
 ) -> DataFrame:
     """UBO identification (README.md:13): owners whose effective (multi-path,
-    depth-bounded) ownership of an entity meets the threshold."""
+    depth-bounded) ownership of an entity meets the threshold, ordered by
+    rounded ownership (desc), owner, entity.
+
+    Gated like :func:`expand_neighborhood` (same gate, memory and
+    lifetime). Within the gate the Spark path below computes the closure
+    once per (session, sf_dir, max_depth) at threshold 0. Each call then
+    filters it on the unrounded values and starts no Spark job. The first
+    call pays the build. A one-shot batch such as the nightly compliance
+    pass pays it too and gets no reuse."""
     tables(spark, sf_dir)
-    edges = catalog.hierarchy_edges(spark, sf_dir)
-    owners = edges.filter(F.col("rel_type") == "customer_of").select("src").distinct()
-    ubo = ubo_closure(edges, max_depth=max_depth, threshold=threshold)
+    gated = graph_snapshot.ubo(
+        spark, sf_dir, threshold, max_depth,
+        closure=lambda: _owner_closure(spark, sf_dir, max_depth, 0.0),
+    )
+    if gated is not None:
+        return gated
     return (
-        ubo.join(owners, ubo.owner == owners.src, "left_semi")
+        _owner_closure(spark, sf_dir, max_depth, threshold)
         .select(
             "owner",
             "entity",

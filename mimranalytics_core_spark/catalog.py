@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import functools
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,10 +50,17 @@ _VIEW_CACHE: dict[tuple, DataFrame] = {}
 # teardown. For the engine's own lifecycles (one session per bench/driver
 # process, <= a few sf_dirs) the cache stays tens of entries.
 
+# Driver-side hierarchy snapshots (functions/graph_snapshot.py), keyed like
+# the views per (session, sf_dir). They live and die with the view plans
+# above, so a snapshot is never staler than the Spark path it stands in for.
+_SNAPSHOT_CACHE: dict[tuple, object] = {}
+
 
 def clear_view_cache() -> None:
-    """Drop all memoized view plans (releases their pinned sessions)."""
+    """Drop all memoized view plans (releases their pinned sessions) and
+    the graph snapshots built beside them."""
     _VIEW_CACHE.clear()
+    _SNAPSHOT_CACHE.clear()
 
 
 def _memo_view(fn):
@@ -232,47 +240,89 @@ def hierarchy_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c_edges.unionByName(s_edges).unionByName(n_edges)
 
 
-# the full attribute-view column set — one schema across every tier so the
+# The attribute-view property types — one schema across every tier so the
 # per-label branches union cleanly (Neo4j semantics: a property absent on a
-# label reads as a typed null). Order matters only for readability; the
-# Cypher layer selects by name.
-_NODE_COLS = (
-    "id", "label", "name", "acctbal", "mktsegment", "nationkey", "regionkey",
-    "custkey", "suppkey", "orderkey", "orderstatus", "totalprice",
-    "orderdate", "orderpriority", "partkey", "brand", "retailprice",
-)
+# label reads as a typed null). Order is the view's column order after
+# (id, label, id_n); the Cypher layer selects by name.
+_PROP_TYPES = {
+    "name": "string", "acctbal": "double", "mktsegment": "string",
+    "nationkey": "long", "regionkey": "long", "custkey": "long",
+    "suppkey": "long", "orderkey": "long", "orderstatus": "string",
+    "totalprice": "double", "orderdate": "date",
+    "orderpriority": "string", "partkey": "long", "brand": "string",
+    "retailprice": "double",
+}
 
 
-def _node_branch(df: DataFrame, prefix: str, label: str, key: str, **cols) -> DataFrame:
+class NodeLabel(NamedTuple):
+    """One node label of the attribute views: the view's ``label`` value,
+    the id prefix, the base table and its key column, and the label's own
+    properties (view column → base column, cast to ``_PROP_TYPES``)."""
+
+    label: str
+    prefix: str
+    table: str
+    key: str
+    props: dict[str, str]
+
+
+# The per-label spec :func:`hierarchy_nodes` and :func:`business_nodes` are
+# built from, keyed by Cypher label; serving's /schema lists it as is.
+ENTITY_LABELS = {
+    "Customer": NodeLabel("customer", "c:", "customer", "c_custkey", {
+        "name": "c_name", "acctbal": "c_acctbal", "mktsegment": "c_mktsegment",
+        "nationkey": "c_nationkey", "custkey": "c_custkey",
+    }),
+    "Supplier": NodeLabel("supplier", "s:", "supplier", "s_suppkey", {
+        "name": "s_name", "acctbal": "s_acctbal", "nationkey": "s_nationkey",
+        "suppkey": "s_suppkey",
+    }),
+    "Nation": NodeLabel("nation", "n:", "nation", "n_nationkey", {
+        "name": "n_name", "nationkey": "n_nationkey", "regionkey": "n_regionkey",
+    }),
+    "Region": NodeLabel("region", "r:", "region", "r_regionkey", {
+        "name": "r_name", "regionkey": "r_regionkey",
+    }),
+}
+FACT_LABELS = {
+    "Order": NodeLabel("order", "o:", "orders", "o_orderkey", {
+        "custkey": "o_custkey", "orderkey": "o_orderkey",
+        "orderstatus": "o_orderstatus", "totalprice": "o_totalprice",
+        "orderdate": "o_orderdate", "orderpriority": "o_orderpriority",
+    }),
+    "Part": NodeLabel("part", "p:", "part", "p_partkey", {
+        "name": "p_name", "partkey": "p_partkey", "brand": "p_brand",
+        "retailprice": "p_retailprice",
+    }),
+}
+
+
+def _node_branch(spark: SparkSession, spec: NodeLabel) -> DataFrame:
     """One per-label projection of the attribute view: the namespaced id,
     the literal label (constant-folds, so a labeled node-only MATCH prunes
     to ONE base-table scan — round-9), and the label's own properties with
     typed nulls everywhere else."""
-    null_of = {
-        "name": "string", "acctbal": "double", "mktsegment": "string",
-        "nationkey": "long", "regionkey": "long", "custkey": "long",
-        "suppkey": "long", "orderkey": "long", "orderstatus": "string",
-        "totalprice": "double", "orderdate": "date",
-        "orderpriority": "string", "partkey": "long", "brand": "string",
-        "retailprice": "double",
-    }
     sel = [
-        F.concat(F.lit(prefix), F.col(key)).alias("id"),
-        F.lit(label).alias("label"),
-        _nid(prefix, key).alias("id_n"),
+        F.concat(F.lit(spec.prefix), F.col(spec.key)).alias("id"),
+        F.lit(spec.label).alias("label"),
+        _nid(spec.prefix, spec.key).alias("id_n"),
     ]
-    for c in _NODE_COLS[2:]:
-        sel.append(
-            cols[c].alias(c) if c in cols
-            else F.lit(None).cast(null_of[c]).alias(c)
-        )
-    return df.select(*sel)
+    for c, typ in _PROP_TYPES.items():
+        src = F.col(spec.props[c]) if c in spec.props else F.lit(None)
+        sel.append(src.cast(typ).alias(c))
+    return spark.table(spec.table).select(*sel)
+
+
+def _nodes_view(spark: SparkSession, specs) -> DataFrame:
+    branches = [_node_branch(spark, spec) for spec in specs]
+    return functools.reduce(lambda a, b: a.unionByName(b), branches)
 
 
 @_memo_view
 def hierarchy_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Node-attribute table for the hierarchy graph (the four ENTITY tiers:
-    customer/supplier/nation/region), schema ``_NODE_COLS``.
+    customer/supplier/nation/region, :data:`ENTITY_LABELS`), schema
+    (id, label, id_n, *``_PROP_TYPES``).
 
     The property side of the property-graph model (reference README.md:25 —
     Neo4j nodes carry labels + properties): namespaced ids matching
@@ -292,50 +342,18 @@ def hierarchy_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation/region tiers are broadcast-small at any SF), and the literal
     label column constant-folds so labeled scans prune to one base table.
     """
-    return (
-        _node_branch(
-            spark.table("customer"), "c:", "customer", "c_custkey",
-            name=F.col("c_name"),
-            acctbal=F.col("c_acctbal").cast("double"),
-            mktsegment=F.col("c_mktsegment"),
-            nationkey=F.col("c_nationkey").cast("long"),
-            custkey=F.col("c_custkey").cast("long"),
-        )
-        .unionByName(
-            _node_branch(
-                spark.table("supplier"), "s:", "supplier", "s_suppkey",
-                name=F.col("s_name"),
-                acctbal=F.col("s_acctbal").cast("double"),
-                nationkey=F.col("s_nationkey").cast("long"),
-                suppkey=F.col("s_suppkey").cast("long"),
-            )
-        )
-        .unionByName(
-            _node_branch(
-                spark.table("nation"), "n:", "nation", "n_nationkey",
-                name=F.col("n_name"),
-                nationkey=F.col("n_nationkey").cast("long"),
-                regionkey=F.col("n_regionkey").cast("long"),
-            )
-        )
-        .unionByName(
-            _node_branch(
-                spark.table("region"), "r:", "region", "r_regionkey",
-                name=F.col("r_name"),
-                regionkey=F.col("r_regionkey").cast("long"),
-            )
-        )
-    )
+    return _nodes_view(spark, ENTITY_LABELS.values())
 
 
 @_memo_view
 def business_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BUSINESS graph's node-attribute view: the four entity tiers of
-    :func:`hierarchy_nodes` plus the FACT tiers — ``order`` (``o:<orderkey>``
-    — orderkey/custkey natural keys, orderstatus, totalprice, orderdate,
-    orderpriority) and ``part`` (``p:<partkey>`` — partkey, name, brand,
-    retailprice). Round-12, r11 VERDICT "What's missing" #1: the Cypher user
-    previously could not reach the fact tables at all.
+    :func:`hierarchy_nodes` plus the FACT tiers (:data:`FACT_LABELS`) —
+    ``order`` (``o:<orderkey>`` — orderkey/custkey natural keys,
+    orderstatus, totalprice, orderdate, orderpriority) and ``part``
+    (``p:<partkey>`` — partkey, name, brand, retailprice). Round-12, r11
+    VERDICT "What's missing" #1: the Cypher user previously could not reach
+    the fact tables at all.
 
     Scale: the fact tiers are the LARGE tables (orders/part), which is
     exactly why they live in a separate view — the Cypher layer routes to
@@ -345,28 +363,8 @@ def business_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     cypher.py's routing note). Labeled access prunes to one base-table scan
     via the constant-folded label column, same as every other tier.
     """
-    return (
-        hierarchy_nodes(spark, sf_dir)
-        .unionByName(
-            _node_branch(
-                spark.table("orders"), "o:", "order", "o_orderkey",
-                custkey=F.col("o_custkey").cast("long"),
-                orderkey=F.col("o_orderkey").cast("long"),
-                orderstatus=F.col("o_orderstatus"),
-                totalprice=F.col("o_totalprice").cast("double"),
-                orderdate=F.col("o_orderdate").cast("date"),
-                orderpriority=F.col("o_orderpriority"),
-            )
-        )
-        .unionByName(
-            _node_branch(
-                spark.table("part"), "p:", "part", "p_partkey",
-                name=F.col("p_name"),
-                partkey=F.col("p_partkey").cast("long"),
-                brand=F.col("p_brand"),
-                retailprice=F.col("p_retailprice").cast("double"),
-            )
-        )
+    return hierarchy_nodes(spark, sf_dir).unionByName(
+        _nodes_view(spark, FACT_LABELS.values())
     )
 
 

@@ -44,9 +44,13 @@ Design notes:
   submission; concurrent requests become concurrent Spark jobs under the
   scheduler — at cluster scale this process is a thin driver-side
   gateway, exactly the reference's FastAPI role).
-- Responses cap rows at ``max_rows`` (default 1000) — an API gateway
-  must never ``collect()`` an unbounded result; paging beyond the cap is
-  the ``limit_offset`` operator's job.
+- Responses cap rows at ``max_rows`` (default 1000, clamped to
+  ``MAX_ROWS_CAP``; a negative or non-integer value is a 400 before any
+  query runs) — an API gateway must never ``collect()`` an unbounded
+  result; paging beyond the cap is the ``limit_offset`` operator's job.
+- ``/expand`` and ``/ubo`` on a hierarchy within the snapshot gate are
+  answered from a driver-side graph snapshot and start no Spark job
+  (``functions/graph_snapshot.py``).
 - Timestamps/decimals serialize via ``str`` fallback — the audit-report
   JSON shape (README.md:19).
 """
@@ -61,9 +65,61 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import DataFrame, SparkSession
 
 
+# Server-side ceiling on ``max_rows``: larger requests are clamped to it.
+MAX_ROWS_CAP = 10_000
+
+
+def _max_rows(raw) -> int:
+    """The response row cap a request asked for: a non-integer or negative
+    value is a client error (ValueError → 400, raised before any query
+    runs); a value above :data:`MAX_ROWS_CAP` is clamped to it."""
+    try:
+        n = int(raw)
+    except (TypeError, ValueError):
+        raise ValueError(f"max_rows must be an integer, got {raw!r}") from None
+    if n < 0:
+        raise ValueError(f"max_rows must be >= 0, got {n}")
+    return min(n, MAX_ROWS_CAP)
+
+
 def _df_json(df: DataFrame, max_rows: int = 1000) -> bytes:
     rows = [r.asDict(recursive=True) for r in df.limit(max_rows).collect()]
     return json.dumps({"rows": rows, "n": len(rows)}, default=str).encode()
+
+
+def _schema() -> dict:
+    """The /schema payload: node labels with their property keys, from the
+    catalog's per-label spec the attribute views are built from, and the
+    relationship types per graph view. Static — the graph views are
+    derived, so the schema IS the catalog contract, no scan needed."""
+    from mimranalytics_core_spark.catalog import ENTITY_LABELS, FACT_LABELS
+
+    def labels(specs: dict) -> dict[str, list[str]]:
+        return {name: ["id", "label", *spec.props] for name, spec in specs.items()}
+
+    hier_rels = ["CUSTOMER_OF", "SUPPLIER_OF", "NATION_OF"]
+    return {
+        "graphs": {
+            "hierarchy": {
+                "labels": labels(ENTITY_LABELS),
+                "relationship_types": hier_rels,
+            },
+            "business": {
+                "labels": labels({**ENTITY_LABELS, **FACT_LABELS}),
+                "relationship_types": [*hier_rels, "PLACED", "CONTAINS", "SUPPLIES"],
+                "routing": (
+                    "default-graph queries naming the fact "
+                    "tier (:Order/:Part/:PLACED/:CONTAINS/"
+                    ":SUPPLIES) run here automatically"
+                ),
+            },
+            "trade_credit": {
+                "labels": {"Customer": ["id"], "Supplier": ["id"]},
+                "relationship_types": ["BUYS_FROM", "CO_LOCATED"],
+            },
+        },
+        "universal_properties": ["id", "label", "name"],
+    }
 
 
 # redirect_stdout swaps the PROCESS-global sys.stdout, and the handler
@@ -114,6 +170,7 @@ def make_server(
                 if u.path == "/health":
                     self._send(200, b'{"status": "ok"}')
                     return
+                max_rows = _max_rows(q.get("max_rows", 1000))
                 if u.path == "/ubo":
                     df = api.ubo_report(
                         spark, sf_dir, threshold=float(q.get("threshold", 0.25))
@@ -152,70 +209,7 @@ def make_server(
                         spark, sf_dir, max_levenshtein=int(q.get("max_levenshtein", 3))
                     )
                 elif u.path == "/schema":
-                    # graph-schema introspection (round-7 — the Neo4j
-                    # db.schema.visualization / CALL db.labels surface a
-                    # driver calls on connect): node labels with their
-                    # property keys (per-label extras marked), the
-                    # relationship types per graph view, and the total
-                    # node-property triple every label shares. Static —
-                    # the graph views are derived, so the schema IS the
-                    # catalog contract, no scan needed.
-                    # round-11: + the natural FK columns; round-12: +
-                    # natural keys (custkey/suppkey) and the business
-                    # graph — the hierarchy superset carrying the fact
-                    # tiers (Order/Part, PLACED/CONTAINS). A default-graph
-                    # Cypher query that names the fact tier routes onto
-                    # the business view automatically (cypher.run's
-                    # fact-tier routing note).
-                    _hier_labels = {
-                        "Customer": ["id", "label", "name", "acctbal",
-                                     "mktsegment", "nationkey", "custkey"],
-                        "Supplier": ["id", "label", "name", "acctbal",
-                                     "nationkey", "suppkey"],
-                        "Nation": ["id", "label", "name", "nationkey",
-                                   "regionkey"],
-                        "Region": ["id", "label", "name", "regionkey"],
-                    }
-                    payload = {
-                        "graphs": {
-                            "hierarchy": {
-                                "labels": _hier_labels,
-                                "relationship_types": [
-                                    "CUSTOMER_OF", "SUPPLIER_OF", "NATION_OF",
-                                ],
-                            },
-                            "business": {
-                                "labels": {
-                                    **_hier_labels,
-                                    "Order": ["id", "label", "custkey",
-                                              "orderkey", "orderstatus",
-                                              "totalprice", "orderdate",
-                                              "orderpriority"],
-                                    "Part": ["id", "label", "name",
-                                             "partkey", "brand",
-                                             "retailprice"],
-                                },
-                                "relationship_types": [
-                                    "CUSTOMER_OF", "SUPPLIER_OF", "NATION_OF",
-                                    "PLACED", "CONTAINS", "SUPPLIES",
-                                ],
-                                "routing": (
-                                    "default-graph queries naming the fact "
-                                    "tier (:Order/:Part/:PLACED/:CONTAINS/"
-                                    ":SUPPLIES) run here automatically"
-                                ),
-                            },
-                            "trade_credit": {
-                                "labels": {
-                                    "Customer": ["id"],
-                                    "Supplier": ["id"],
-                                },
-                                "relationship_types": ["BUYS_FROM", "CO_LOCATED"],
-                            },
-                        },
-                        "universal_properties": ["id", "label", "name"],
-                    }
-                    self._send(200, json.dumps(payload).encode())
+                    self._send(200, json.dumps(_schema()).encode())
                     return
                 elif u.path == "/ops":
                     # saved-query catalog: every registered operator, its
@@ -248,7 +242,7 @@ def make_server(
                 else:
                     self._send(404, b'{"error": "unknown endpoint"}')
                     return
-                self._send(200, _df_json(df, max_rows=int(q.get("max_rows", 1000))))
+                self._send(200, _df_json(df, max_rows=max_rows))
             except (CypherSyntaxError, ValueError) as exc:  # client errors
                 self._send(400, json.dumps({"error": str(exc)}).encode())
             except Exception as exc:  # noqa: BLE001 — gateway boundary
@@ -269,6 +263,7 @@ def make_server(
                     raise ValueError(f"invalid JSON body: {exc}") from exc
                 if not isinstance(body, dict):
                     raise ValueError("request body must be a JSON object")
+                max_rows = _max_rows(body.get("max_rows", 1000))
                 df = api.cypher(
                     spark,
                     sf_dir,
@@ -276,7 +271,7 @@ def make_server(
                     graph=body.get("graph", "hierarchy"),
                     params=body.get("params"),
                 )
-                self._send(200, _df_json(df, max_rows=int(body.get("max_rows", 1000))))
+                self._send(200, _df_json(df, max_rows=max_rows))
             except (CypherSyntaxError, ValueError) as exc:  # client errors
                 self._send(400, json.dumps({"error": str(exc)}).encode())
             except Exception as exc:  # noqa: BLE001 — gateway boundary

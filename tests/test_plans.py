@@ -326,10 +326,17 @@ def test_with_orderby_prop_collapses_to_take_ordered(spark):
 
 
 def test_label_predicate_prefix_is_sargable(spark):
-    """x:Customer OR x:Supplier becomes prefix LIKEs over the node id —
-    the plan must carry the StartsWith filter and stay cartesian-free."""
+    """x:Customer OR x:Supplier becomes a tier-code test over the encoded
+    node id (``shiftright(id_n, 48) = <code>``, round-16 numeric ids) — the
+    plan must carry that comparison as a scan-local filter and stay
+    cartesian-free."""
+    import re
+
     plan = _plan(spark, "cypher_label_predicate")
-    assert "StartsWith" in plan or "LIKE" in plan or "startswith" in plan.lower()
+    tier_test = re.compile(r"shiftright\([^()]*(\([^()]*\))?[^()]*, 48\) = [0-9]+\)")
+    assert tier_test.search(plan), plan
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert scans and all("shiftright" in ln for ln in scans), plan
     assert "CartesianProduct" not in plan
 
 
@@ -453,15 +460,30 @@ def test_comma_cartesian_replans_as_hash_join(spark):
     ), plan
 
 
-def test_supply_chain_plan_is_hash_join_only(spark):
+def test_supply_chain_plan_is_hash_join_only(spark, monkeypatch):
     """The round-13 tripartite conflict-of-interest rollup (5-variable
     typed chain + comma chain closing the nation triangle): all hash
     joins, never a cartesian/BNLJ — the contains⋈supplies part-key join
-    is the fan-out point and must stay an equi-join."""
+    is the fan-out point and must stay an equi-join. Since the round-16
+    multi-distinct split the chain sits behind a localCheckpoint (the
+    declared plan reads it as ``Scan ExistingRDD``), so the joins are
+    counted in the plan the checkpoint materializes."""
+    frame_cls = type(spark.range(1))  # the concrete (classic) DataFrame
+    sources = []
+    orig = frame_cls.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        sources.append(self._jdf.queryExecution().executedPlan().toString())
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
     plan = _plan(spark, "cypher_supply_chain")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoop" not in plan
-    assert plan.count("HashJoin") >= 4, plan
+    assert "Scan ExistingRDD" in plan and sources, plan
+    src = sources[-1]
+    assert "CartesianProduct" not in src and "BroadcastNestedLoop" not in src, src
+    assert src.count("HashJoin") >= 4, src
 
 
 def test_shortest_path_reconstruction_no_cartesian(spark):
