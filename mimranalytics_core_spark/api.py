@@ -11,13 +11,14 @@ Neo4j+NetworkX.
 
 All functions are thin compositions over ``catalog`` edge views and
 ``functions/graph_algos`` — no new execution logic, so everything inherits
-the engine's oracle-tested semantics and scale posture. The one exception
-is the interactive pair :func:`expand_neighborhood` and :func:`ubo_report`:
-on a hierarchy within ``graph_snapshot.MAX_EDGES`` edges they answer from a
-driver-side snapshot of the same edge view (``functions/graph_snapshot.py``)
-and start no Spark job once it is built; the Spark path stays the scale path
-above the gate and the reference the tests hold the snapshot to.
-:func:`export_graph_viz` always runs on Spark.
+the engine's oracle-tested semantics and scale posture. The exceptions
+are the interactive calls: :func:`expand_neighborhood`, :func:`ubo_report`
+and bound-id seeks through :func:`shortest_paths` and :func:`match_path`.
+Within the gates of ``functions/graph_snapshot.py`` they answer from a
+driver-side snapshot of the same edge views and start no Spark job once it
+is built; the Spark path stays the scale path above the gates and the
+reference the tests hold the snapshot to. :func:`export_graph_viz` always
+runs on Spark.
 """
 
 from __future__ import annotations
@@ -239,12 +240,7 @@ def _edge_frame(
     # owns_stake hop with an entity-tier hop resolves each against the
     # right view, and untyped traversals stay on the pruned entity
     # graph (the 100 TB partition-pruning posture is unchanged).
-    if (
-        as_of is None
-        and edge_types is not None
-        and "owns_stake" in edge_types
-        and graph != "trade_credit"
-    ):
+    if _owns_stake_routed(as_of, edge_types, graph):
         as_of = "*"
     if graph == "trade_credit":
         if as_of is not None:
@@ -275,8 +271,13 @@ def _edge_frame(
             else catalog.hierarchy_edges(spark, sf_dir)
         )
         if numeric:
-            # convert BEFORE the renormalization window so its exchange
-            # partitions on the 8-byte long, not the namespaced string
+            # convert BEFORE the renormalization window so, when a query
+            # reads the weight, its exchange partitions on the 8-byte long,
+            # not the namespaced string. A query that reads no weight
+            # prunes the window: cypher_temporal_bare_headline plans the
+            # same either way (plans/r17, before = window on the string),
+            # and an interleaved A/B at sf0.1 (4 CPUs, local[2]) measured
+            # no difference.
             t, base = _as_numeric_ids(t), _as_numeric_ids(base)
         tot = F.sum("weight").over(Window.partitionBy("src"))
         t = t.withColumn("weight", F.col("weight") / tot)
@@ -327,6 +328,32 @@ def _edge_frame(
     return e.select("src", "dst", "weight")
 
 
+def _owns_stake_routed(as_of: str | None, edge_types, graph: str) -> bool:
+    """Whether :func:`_edge_frame` routes a bare typed ``owns_stake``
+    pattern onto the temporal view (the open-validity sentinel)."""
+    return (
+        as_of is None
+        and edge_types is not None
+        and "owns_stake" in edge_types
+        and graph != "trade_credit"
+    )
+
+
+def _seek_eligible(graph: str, as_of, edge_types, src_pred, direction: str) -> bool:
+    """The free checks of the snapshot seek gate, made before any snapshot
+    is built: a hierarchy or trade-credit traversal in a known direction,
+    with no as-of filter and no owns_stake routing, from a bound source
+    predicate. ``graph_snapshot`` then checks the seed count and the
+    output budget."""
+    return (
+        graph in graph_snapshot.SEEK_GRAPHS
+        and as_of is None
+        and not _owns_stake_routed(as_of, edge_types, graph)
+        and src_pred is not None
+        and direction in graph_snapshot.DIRECTIONS
+    )
+
+
 def _directed_view(e: DataFrame, direction: str) -> DataFrame:
     """Apply a traversal direction to a (src, dst[, ...]) edge frame,
     PRESERVING any extra columns: ``out`` = as-is, ``in`` = endpoints
@@ -374,12 +401,30 @@ def shortest_paths(
     anti-join per level for ALL sources at once — supersteps = max_hops
     regardless of |V| or |sources|, no path-SET enumeration (the
     scale-correct shortest-path shape; a per-path closure would be
-    O(walks) on cyclic graphs)."""
+    O(walks) on cyclic graphs).
+
+    Snapshot seek (no ``keep_paths``): on the hierarchy or trade-credit
+    graph, with no ``as_of``, no owns_stake routing and a ``src_pred``
+    (checked first, at no cost), the answer is a BFS per seed over the
+    driver-side snapshot (``functions/graph_snapshot.py``) when the view
+    has at most ``graph_snapshot.MAX_EDGES`` (250,000) edges, ``src_pred``
+    selects at most ``MAX_SEEDS`` (16) nodes and the output stays within
+    ``MAX_PATH_ROWS`` (100,000) rows. The seeds come from ``src_pred``
+    evaluated over a local node relation (no job), and the result is a
+    job-free local frame with this path's schema, so ``/explain`` shows a
+    ``LocalTableScan`` under the rest of the Cypher plan. Otherwise the
+    Spark BFS runs."""
     from mimranalytics_core_spark.functions.graph_algos import (
         multi_source_distances,
         multi_source_shortest_paths,
     )
 
+    if not keep_paths and _seek_eligible(graph, as_of, edge_types, src_pred, direction):
+        gated = graph_snapshot.shortest(
+            spark, sf_dir, graph, edge_types, direction, src_pred, min_hops, max_hops
+        )
+        if gated is not None:
+            return gated
     e = _edge_frame(spark, sf_dir, edge_types=edge_types, as_of=as_of, graph=graph)
     e = _directed_view(e.select("src", "dst"), direction)
     sources = e.select("src").distinct()
@@ -555,6 +600,20 @@ def match_path(
     as-of filters prune edges BEFORE the first join. The trail guard is a
     row-local array membership test on the accumulated edge-key list (≤
     max_hops entries) — no extra shuffle (functions/graph_algos.path_rows).
+
+    Snapshot seek: with ``max_hops`` of 2 or more, the ``path_rows`` call
+    is answered from the driver-side snapshot under the same gates as
+    :func:`shortest_paths` (hierarchy or trade-credit graph, no ``as_of``,
+    no owns_stake routing, a ``src_pred`` selecting at most
+    ``graph_snapshot.MAX_SEEDS`` nodes, at most ``MAX_PATH_ROWS``
+    enumerated rows), by a depth-first enumeration
+    with ``path_rows``' semantics: the (src, dst) pair is the relationship
+    identity for the trail guard, ``direction="both"`` keeps each original
+    edge as that identity, ``path_weight`` is the product and
+    ``path_cost`` the sum of the weights. ``keep_edges`` and
+    ``carry_weight_list`` always take the Spark path. Everything after the
+    enumeration (the zero-hop tier, walk aggregation, type join, rounding)
+    runs on the local frame unchanged.
     """
     if keep_edges and not trail:
         raise ValueError(
@@ -593,14 +652,23 @@ def match_path(
                 "carry_type is undefined on an undirected segment (the "
                 "traversal does not preserve the stored orientation)"
             )
-    e = _edge_frame(
-        spark, sf_dir, edge_types=edge_types, as_of=as_of, graph=graph,
-        numeric=numeric,
+    def edges() -> DataFrame:
+        e = _edge_frame(
+            spark, sf_dir, edge_types=edge_types, as_of=as_of, graph=graph,
+            numeric=numeric,
+        )
+        return _directed_view(e, "in") if direction == "in" else e  # weight kept
+
+    # a one-hop match has no traversal join to save: its path_rows plan is
+    # the edge scan with src_pred pushed into the parquet reader
+    seek = max_hops > 1 and not (keep_edges or carry_weight_list) and _seek_eligible(
+        graph, as_of, edge_types, src_pred, direction
     )
+    # an eligible call names a known graph and no as_of, so it passes every
+    # check in _edge_frame; its edge frame is built only if the seek falls back
+    e = None if seek else edges()
     if direction not in ("out", "in", "both"):
         raise ValueError(f"unknown direction {direction!r} (out | in | both)")
-    if direction == "in":
-        e = _directed_view(e, "in")  # endpoint swap, weight preserved
 
     from mimranalytics_core_spark.functions.graph_algos import path_rows
 
@@ -662,12 +730,21 @@ def match_path(
             )
         out = zero
     else:
-        out = path_rows(
-            e, min_hops=min_hops, max_hops=max_hops, src_pred=src_pred,
-            unique_edges=trail, undirected=(direction == "both"),
-            keep_edges=keep_edges, carry_cost=carry_cost,
-            keep_weights=carry_weight_list,
-        )
+        out = None
+        if seek:
+            out = graph_snapshot.paths(
+                spark, sf_dir, graph, edge_types, direction, src_pred,
+                min_hops, max_hops, unique_edges=trail, numeric=numeric,
+                carry_cost=carry_cost,
+            )
+        if out is None:
+            out = path_rows(
+                e if e is not None else edges(), min_hops=min_hops,
+                max_hops=max_hops, src_pred=src_pred,
+                unique_edges=trail, undirected=(direction == "both"),
+                keep_edges=keep_edges, carry_cost=carry_cost,
+                keep_weights=carry_weight_list,
+            )
         if zero is not None:
             out = out.unionByName(zero)
     if trail:

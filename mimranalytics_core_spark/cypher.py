@@ -480,10 +480,11 @@ def _decode_vars_sql(sql: str, num_vars) -> str:
     # prefix literals) cannot be re-substituted by a later variable. The
     # leading quoted-string alternative consumes literals whole, so a var
     # name inside quotes is never rewritten — and the LIKE branch can see
-    # its own quoted prefix (an _outside_quotes split would hide it).
+    # its own quoted prefix (an _outside_quotes split would hide it). A
+    # literal may hold backslash escapes (Spark SQL's \' included).
     alt = "|".join(re.escape(v) for v in vs)
     rx = re.compile(
-        rf"'[^']*'|(?<![.\w])(?P<v>{alt})"
+        rf"'(?:[^'\\]|\\.)*'|(?<![.\w])(?P<v>{alt})"
         rf"(?:\s+LIKE\s+'(?P<pfx>[csnrop]):%'|\b(?!\s*[.(]))"
     )
 

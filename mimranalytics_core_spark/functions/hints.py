@@ -51,7 +51,13 @@ def source_rows(df: DataFrame) -> int | None:
     driver-side, no job. None if the inputs are not plain parquet files.
     Compressed bytes are a poor scale proxy for replicated fixtures
     (columnar encoding collapses duplicates), so row-count gates use this
-    instead of :func:`source_bytes`."""
+    instead of :func:`source_bytes`.
+
+    Assumes ``df`` reads ONE source table: the footers of every file in
+    ``df.inputFiles()`` are summed, so a join or union of several tables
+    counts all of their rows. Callers gate on a single base table (the
+    graph snapshot sums three single-table calls); passing a multi-table
+    plan only inflates the count, which turns a gate off, never on."""
     try:
         import pyarrow.parquet as pq
 

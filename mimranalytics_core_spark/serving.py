@@ -18,7 +18,8 @@ Endpoints (GET, query-string parameters):
 - ``/cypher?q=MATCH...&graph=...&params={"name": value}`` → api.cypher
   (the migrating-user entry point; ``params`` is a JSON object binding
   ``$name`` placeholders per request — the FastAPI parameterized-query
-  lifecycle; CypherSyntaxError → HTTP 400). Also accepts **POST** with a
+  lifecycle; CypherSyntaxError, or a parameter value Spark cannot cast,
+  → HTTP 400). Also accepts **POST** with a
   JSON body ``{"q": ..., "graph": ..., "params": {...}, "max_rows": n}``
   — the canonical form for long queries and rich parameter maps (URL
   length limits and query-string escaping stop mattering).
@@ -62,11 +63,16 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
+from pyspark.errors import NumberFormatException
 from pyspark.sql import DataFrame, SparkSession
 
 
 # Server-side ceiling on ``max_rows``: larger requests are clamped to it.
 MAX_ROWS_CAP = 10_000
+# Routes whose request carries Cypher parameter values: a value Spark
+# cannot cast to the type its comparison needs ([CAST_INVALID_INPUT],
+# raised at planning or collect) is a client fault there, answered 400.
+_PARAM_ROUTES = ("/cypher", "/explain")
 
 
 def _max_rows(raw) -> int:
@@ -245,6 +251,9 @@ def make_server(
                 self._send(200, _df_json(df, max_rows=max_rows))
             except (CypherSyntaxError, ValueError) as exc:  # client errors
                 self._send(400, json.dumps({"error": str(exc)}).encode())
+            except NumberFormatException as exc:
+                code = 400 if u.path in _PARAM_ROUTES else 500
+                self._send(code, json.dumps({"error": str(exc)}).encode())
             except Exception as exc:  # noqa: BLE001 — gateway boundary
                 self._send(500, json.dumps({"error": str(exc)}).encode())
 
@@ -272,7 +281,7 @@ def make_server(
                     params=body.get("params"),
                 )
                 self._send(200, _df_json(df, max_rows=max_rows))
-            except (CypherSyntaxError, ValueError) as exc:  # client errors
+            except (CypherSyntaxError, ValueError, NumberFormatException) as exc:
                 self._send(400, json.dumps({"error": str(exc)}).encode())
             except Exception as exc:  # noqa: BLE001 — gateway boundary
                 self._send(500, json.dumps({"error": str(exc)}).encode())

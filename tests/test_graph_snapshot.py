@@ -13,9 +13,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from mimranalytics_core_spark import api, catalog
+from mimranalytics_core_spark.catalog import decode_id_sql
+from mimranalytics_core_spark.functions import graph_algos
 from mimranalytics_core_spark.functions import graph_snapshot as gs
 from mimranalytics_core_spark.functions.graph_algos import (
     bfs_distances,
+    multi_source_distances,
+    path_rows,
     ubo_closure,
     undirect,
 )
@@ -184,3 +188,235 @@ def test_concurrent_first_requests_build_once(spark, monkeypatch):
     assert not any(th.is_alive() for th in threads)
     assert len(results) == 8 and all(r == results[0] for r in results)
     assert len(builds) == 1
+
+
+# ---------------------------------------------------------------------------
+# seeks: shortest_paths and match_path from a bound source predicate
+# ---------------------------------------------------------------------------
+
+RELS = ("r1", "r2", "r3")
+
+
+def _typed_edges(seed: int) -> list[tuple[str, str, str, float | None]]:
+    """A random typed digraph with cycles (so trails and walks differ),
+    two parallel relationships of different types between one pair, a
+    null weight and a node with only in-edges."""
+    rng = random.Random(seed)
+    nodes = [f"c:{i}" for i in range(12)] + [f"s:{i}" for i in range(6)]
+    pairs = set()
+    while len(pairs) < 40:
+        a, b = rng.sample(nodes, 2)
+        pairs.add((a, b))
+    edges = [(s, d, rng.choice(RELS), round(rng.uniform(0.1, 0.9), 3)) for s, d in sorted(pairs)]
+    s, d, rel, _ = edges[0]
+    edges.append((s, d, next(r for r in RELS if r != rel), 0.5))
+    edges.append((edges[1][0], edges[1][1], edges[1][2], None))
+    edges.append(("c:0", "sink:0", "r1", 0.25))
+    return edges
+
+
+def _seek_graph(edges, numeric: bool):
+    ids = {n: i for i, n in enumerate(sorted({x for e in edges for x in e[:2]}))}
+    conv = (lambda n: ids[n]) if numeric else (lambda n: n)
+    rows = [(conv(s), conv(d), r, w) for s, d, r, w in edges]
+    g = gs.SeekGraph(*(list(c) for c in zip(*rows)))
+    return g, rows, conv
+
+
+def _key(row):
+    return tuple((-1.0 if v is None else v) if not isinstance(v, str) else v for v in row)
+
+
+@pytest.mark.parametrize("seed,numeric", [(11, False), (23, True)])
+@pytest.mark.parametrize("direction", ["out", "in", "both"])
+def test_path_kernel_matches_spark_path_rows(spark, seed, numeric, direction):
+    edges = _typed_edges(seed)
+    g, rows, conv = _seek_graph(edges, numeric)
+    id_t = "BIGINT" if numeric else "STRING"
+    df = spark.createDataFrame(rows, f"src {id_t}, dst {id_t}, rel_type STRING, weight DOUBLE")
+    # duplicate and unknown seeds next to two real ones
+    seeds = [conv("c:0"), conv("c:0"), conv("s:1")]
+    unknown = 10**6 if numeric else "x:404"
+    pred = "src IN ({})".format(", ".join(repr(s) for s in [*seeds, unknown]))
+    for types in (None, {"r1", "r2"}):
+        e = df if types is None else df.filter(F.col("rel_type").isin(sorted(types)))
+        e = api._directed_view(e, "in") if direction == "in" else e
+        for unique in (True, False):
+            # path_rows' levels are cumulative: a lo..hi run is the 1..4
+            # run's rows with lo <= hops <= hi
+            every = path_rows(
+                e, 1, 4, src_pred=pred, unique_edges=unique,
+                undirected=direction == "both", carry_cost=True,
+            ).collect()
+            for lo, hi in [(1, 1), (1, 2), (2, 3), (1, 4)]:
+                want = [tuple(r) for r in every if lo <= r.hops <= hi]
+                got = g.paths([*seeds, unknown], types, direction, lo, hi, unique, 10**6)
+                assert sorted(got, key=_key) == sorted(want, key=_key), (types, lo, hi, unique)
+
+
+@pytest.mark.parametrize("seed", [11, 23])
+@pytest.mark.parametrize("direction", ["out", "in", "both"])
+def test_distance_kernel_matches_spark_multi_source(spark, seed, direction):
+    edges = _typed_edges(seed)
+    g, rows, _ = _seek_graph(edges, False)
+    df = spark.createDataFrame(rows, "src STRING, dst STRING, rel_type STRING, weight DOUBLE")
+    seeds = ["c:0", "c:0", "s:2", "sink:0", "x:404"]
+    for types in (None, {"r3"}):
+        e = df if types is None else df.filter(F.col("rel_type").isin(sorted(types)))
+        e = api._directed_view(e.select("src", "dst"), direction)
+        sources = e.select(F.col("src").alias("node")).distinct().filter(F.col("node").isin(seeds))
+        for hi in range(1, 5):
+            want = multi_source_distances(e, sources, max_depth=hi).collect()
+            for lo in (0, 1, 2):
+                got = g.distances(seeds, types, direction, lo, hi, 10**6)
+                assert sorted(got) == sorted(tuple(r) for r in want if r.dist >= lo), (types, lo, hi)
+
+
+def test_kernels_stop_past_budget():
+    g, _, _ = _seek_graph(_typed_edges(11), False)
+    full = g.paths(["c:0", "c:1"], None, "both", 1, 3, False, 10**6)
+    assert g.paths(["c:0", "c:1"], None, "both", 1, 3, False, len(full)) == full
+    assert g.paths(["c:0", "c:1"], None, "both", 1, 3, False, len(full) - 1) is None
+    assert g.distances(["c:0", "c:1"], None, "both", 0, 3, 1) is None
+
+
+# (label, call) pairs on SF_SMALL; each one is eligible for a seek
+SEEKS = [
+    ("sp-tc-out", lambda s: api.shortest_paths(
+        s, SF_SMALL, ["buys_from", "co_located"], 1, 2, "src = 'c:7'", graph="trade_credit")),
+    ("sp-tc-both-0", lambda s: api.shortest_paths(
+        s, SF_SMALL, None, 0, 3, "src IN ('c:7', 's:3', 'c:7')", graph="trade_credit",
+        direction="both")),
+    ("sp-h-in", lambda s: api.shortest_paths(
+        s, SF_SMALL, None, 1, 3, "src = 'r:1'", direction="in")),
+    ("mp-h-num", lambda s: api.match_path(
+        s, SF_SMALL, ["customer_of", "nation_of"], 1, 2, f"{decode_id_sql('src')} = 'c:17'",
+        trail=True, carry_weight=True, numeric=True)),
+    ("mp-h-in-cost", lambda s: api.match_path(
+        s, SF_SMALL, None, 1, 2, "src = 'n:3'", trail=True, direction="in", carry_cost=True)),
+    ("mp-tc-both-0", lambda s: api.match_path(
+        s, SF_SMALL, None, 0, 3, "src = 'c:4'", graph="trade_credit", trail=True,
+        direction="both", carry_weight=True)),
+    ("mp-tc-walk", lambda s: api.match_path(
+        s, SF_SMALL, ["buys_from", "co_located"], 2, 3, "src = 's:2'", graph="trade_credit",
+        carry_weight=True)),
+    ("mp-tc-in-0", lambda s: api.match_path(
+        s, SF_SMALL, ["buys_from"], 0, 2, f"{decode_id_sql('src')} = 's:4'",
+        graph="trade_credit", trail=True, direction="in", carry_cost=True, numeric=True)),
+]
+
+
+@pytest.fixture
+def spy(monkeypatch):
+    """Counts of the Spark traversals and snapshot seeks a call starts."""
+    calls: dict[str, int] = {}
+
+    def wrap(mod, name):
+        orig = getattr(mod, name)
+
+        def counted(*a, **k):
+            calls[name] = calls.get(name, 0) + 1
+            return orig(*a, **k)
+
+        monkeypatch.setattr(mod, name, counted)
+
+    for name in ("path_rows", "multi_source_distances"):
+        wrap(graph_algos, name)
+    for name in ("paths", "shortest", "_view"):
+        wrap(gs, name)
+    return calls
+
+
+@pytest.mark.parametrize("label,call", SEEKS, ids=[s[0] for s in SEEKS])
+def test_seek_api_gate_both_ways(spark, monkeypatch, spy, label, call):
+    for cap in ("MAX_EDGES", "MAX_SEEDS"):
+        monkeypatch.setattr(gs, "MAX_EDGES", 10**9)
+        monkeypatch.setattr(gs, "MAX_SEEDS", 16)
+        monkeypatch.setattr(gs, cap, -1)
+        spy.clear()
+        ref = call(spark)
+        assert spy.get("path_rows", 0) + spy.get("multi_source_distances", 0) == 1, cap
+        monkeypatch.setattr(gs, cap, 10**9)
+        spy.clear()
+        snap = call(spark)
+        assert "path_rows" not in spy and "multi_source_distances" not in spy
+        assert snap.schema == ref.schema
+        assert sorted(snap.collect(), key=_key) == sorted(ref.collect(), key=_key)
+
+
+def test_cypher_seek_templates_gate_both_ways(spark, monkeypatch, spy):
+    for q, graph in [
+        ("""MATCH (a)-[:CUSTOMER_OF|NATION_OF*1..2]->(b) WHERE a.id = $id
+            RETURN b AS entity, hops ORDER BY hops, entity""", "hierarchy"),
+        ("""MATCH p = shortestPath((a)-[:BUYS_FROM|CO_LOCATED*1..2]->(b))
+            WHERE a.id = $id RETURN b, length(p) AS hops ORDER BY b""", "trade_credit"),
+    ]:
+        monkeypatch.setattr(gs, "MAX_SEEDS", -1)
+        ref = api.cypher(spark, SF_SMALL, q, graph=graph, params={"id": "c:9"})
+        monkeypatch.setattr(gs, "MAX_SEEDS", 16)
+        spy.clear()
+        snap = api.cypher(spark, SF_SMALL, q, graph=graph, params={"id": "c:9"})
+        assert spy.get("paths", 0) + spy.get("shortest", 0) == 1
+        assert "path_rows" not in spy and "multi_source_distances" not in spy
+        assert snap.schema == ref.schema
+        assert snap.collect() == ref.collect() != []
+
+
+def test_gated_seek_starts_no_spark_job(spark):
+    sc = spark.sparkContext
+    for _, call in SEEKS:
+        call(spark)  # build the views and their seek indices
+    sc.setJobGroup("snapshot-seeks", "gated shortest_paths and match_path")
+    try:
+        for _, call in SEEKS:
+            call(spark)
+        assert sc.statusTracker().getJobIdsForGroup("snapshot-seeks") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.mark.parametrize(
+    "why,call",
+    [
+        ("seeds over the cap", lambda s: api.match_path(
+            s, SF_SMALL, None, 1, 2, "src LIKE 'n:%'", trail=True)),
+        ("as_of", lambda s: api.match_path(
+            s, SF_SMALL, None, 1, 2, "src = 'c:3'", as_of="1996-01-01 00:00:00", trail=True)),
+        ("owns_stake", lambda s: api.match_path(
+            s, SF_SMALL, ["owns_stake"], 1, 2, "src = 'c:3'", trail=True)),
+        ("business", lambda s: api.shortest_paths(
+            s, SF_SMALL, None, 1, 2, "src = 'c:3'", graph="business")),
+        ("no src_pred", lambda s: api.shortest_paths(
+            s, SF_SMALL, None, 1, 2, None, graph="trade_credit")),
+        ("one hop", lambda s: api.match_path(
+            s, SF_SMALL, None, 1, 1, "src = 'c:4'", graph="trade_credit", trail=True,
+            carry_type=True)),
+    ],
+)
+def test_ineligible_seeks_take_the_spark_path(spark, spy, why, call):
+    call(spark)
+    assert spy.get("path_rows", 0) + spy.get("multi_source_distances", 0) == 1, why
+    if why != "seeds over the cap":  # the free checks build no snapshot
+        assert not {"paths", "shortest", "_view"} & set(spy), why
+
+
+def test_over_budget_seek_takes_the_spark_path(spark, monkeypatch, spy):
+    call = SEEKS[5][1]
+    want = sorted(call(spark).collect(), key=_key)
+    assert spy == {"paths": 1, "_view": 1}
+    monkeypatch.setattr(gs, "MAX_PATH_ROWS", 3)
+    spy.clear()
+    assert sorted(call(spark).collect(), key=_key) == want
+    assert spy["paths"] == 1 and spy["path_rows"] == 1
+
+
+def test_explain_of_gated_seek_is_a_local_table_scan(spark, monkeypatch):
+    from mimranalytics_core_spark.serving import _explain_text
+
+    q = """MATCH (a)-[:CUSTOMER_OF|NATION_OF*1..2]->(b) WHERE a.id = $id
+           RETURN b AS entity, hops ORDER BY hops, entity"""
+    plan = _explain_text(api.cypher(spark, SF_SMALL, q, params={"id": "c:9"}))
+    assert "LocalTableScan" in plan and "Scan parquet" not in plan
+    monkeypatch.setattr(gs, "MAX_SEEDS", -1)
+    plan = _explain_text(api.cypher(spark, SF_SMALL, q, params={"id": "c:9"}))
+    assert "Scan parquet" in plan and "LocalTableScan" not in plan

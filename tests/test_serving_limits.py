@@ -83,3 +83,42 @@ def test_max_rows_parser():
     for bad in (-5, "-1", "ten", None, [1]):
         with pytest.raises(ValueError):
             serving._max_rows(bad)
+
+
+# a numeric comparison whose parameter value Spark cannot cast
+# ([CAST_INVALID_INPUT] → pyspark NumberFormatException)
+_BAD_CAST_Q = (
+    "MATCH (c:Customer) WHERE c.acctbal > $min_bal AND c.nationkey = $nk "
+    "RETURN c.custkey AS custkey ORDER BY custkey LIMIT 10"
+)
+_BAD_CAST_PARAMS = {"min_bal": "abc", "nk": 3}
+
+
+def _status(fn) -> tuple[int, str]:
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        fn()
+    return ei.value.code, json.loads(ei.value.read())["error"]
+
+
+def test_post_cypher_bad_param_value_is_400(server):
+    code, err = _status(
+        lambda: _post(server, "/cypher", {"q": _BAD_CAST_Q, "params": _BAD_CAST_PARAMS})
+    )
+    assert code == 400 and "CAST_INVALID_INPUT" in err
+
+
+def test_get_cypher_bad_param_value_is_400(server):
+    code, err = _status(
+        lambda: _get(server, "/cypher", q=_BAD_CAST_Q, params=json.dumps(_BAD_CAST_PARAMS))
+    )
+    assert code == 400 and "CAST_INVALID_INPUT" in err
+
+
+def test_explain_bad_param_value_is_400(server):
+    code, err = _status(
+        lambda: _get(server, "/explain", q=_BAD_CAST_Q, params=json.dumps(_BAD_CAST_PARAMS))
+    )
+    assert code == 400 and "CAST_INVALID_INPUT" in err
+    # the same query with a castable value still answers
+    ok = dict(_BAD_CAST_PARAMS, min_bal="100.5")
+    assert "Physical Plan" in _get(server, "/explain", q=_BAD_CAST_Q, params=json.dumps(ok))["plan"]
