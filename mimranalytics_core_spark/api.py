@@ -12,21 +12,28 @@ Neo4j+NetworkX.
 All functions are thin compositions over ``catalog`` edge views and
 ``functions/graph_algos`` — no new execution logic, so everything inherits
 the engine's oracle-tested semantics and scale posture. The exceptions
-are the interactive calls: :func:`expand_neighborhood`, :func:`ubo_report`
-and bound-id seeks through :func:`shortest_paths` and :func:`match_path`.
-Within the gates of ``functions/graph_snapshot.py`` they answer from a
-driver-side snapshot of the same edge views and start no Spark job once it
-is built; the Spark path stays the scale path above the gates and the
-reference the tests hold the snapshot to. :func:`export_graph_viz` always
-runs on Spark.
+are the graph calls: :func:`expand_neighborhood`, :func:`ubo_report`,
+bound-id seeks through :func:`shortest_paths` and :func:`match_path`,
+:func:`centrality` (pagerank, component, betweenness),
+:func:`circular_ownership` and :func:`export_graph_viz`. Within the gates
+of ``functions/graph_snapshot.py`` they answer from a driver-side
+snapshot of the same edge views with the kernels of
+``functions/graph_kernels.py``, and start no Spark job once the view is
+fetched (a viz export starts only its write); the Spark path stays the
+scale path above the gates and the reference the tests hold the snapshot
+to.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mimranalytics_core_spark import catalog
+from mimranalytics_core_spark.functions import graph_kernels as gk
 from mimranalytics_core_spark.functions import graph_snapshot
 from mimranalytics_core_spark.functions.graph_algos import (
     betweenness,
@@ -80,16 +87,13 @@ def ubo_report(
     rounded ownership (desc), owner, entity.
 
     Gated like :func:`expand_neighborhood` (same gate, memory and
-    lifetime). Within the gate the Spark path below computes the closure
-    once per (session, sf_dir, max_depth) at threshold 0. Each call then
-    filters it on the unrounded values and starts no Spark job. The first
-    call pays the build. A one-shot batch such as the nightly compliance
-    pass pays it too and gets no reuse."""
+    lifetime). Within the gate ``graph_kernels.walk_sum`` computes the
+    closure from the snapshot's edge arrays once per (session, sf_dir,
+    max_depth) at threshold 0, in milliseconds. Each call then filters it
+    on the unrounded values and starts no Spark job; only the first call
+    of a session pays the hierarchy's one fetch."""
     tables(spark, sf_dir)
-    gated = graph_snapshot.ubo(
-        spark, sf_dir, threshold, max_depth,
-        closure=lambda: _owner_closure(spark, sf_dir, max_depth, 0.0),
-    )
+    gated = graph_snapshot.ubo(spark, sf_dir, threshold, max_depth)
     if gated is not None:
         return gated
     return (
@@ -130,10 +134,16 @@ def conflict_report(spark: SparkSession, sf_dir: str, max_levenshtein: int = 3) 
 
 def circular_ownership(spark: SparkSession, sf_dir: str, max_len: int = 4) -> DataFrame:
     """Circular-ownership loops (README.md:15) on the trade-credit digraph:
-    entities with a directed walk back to themselves within ``max_len``."""
+    entities with a directed walk back to themselves within ``max_len``.
+    Within the snapshot's gate: ``graph_kernels.cycle_members``."""
     from mimranalytics_core_spark.operators.graph import TRADE_CREDIT_SQL
 
     tables(spark, sf_dir)
+    g = graph_snapshot.arrays(spark, sf_dir, "trade_credit")
+    if g is not None:
+        nodes, src, dst, _ = g
+        on_cycle = np.flatnonzero(gk.cycle_members(len(nodes), src, dst, int(max_len)))
+        return graph_snapshot.frame(spark, {"entity_on_cycle": nodes.take(on_cycle)})
     return spark.sql(
         f"""
         WITH RECURSIVE {TRADE_CREDIT_SQL},
@@ -170,8 +180,13 @@ def structure_diff(spark: SparkSession, sf_dir: str, t1: str, t2: str) -> DataFr
 
 
 def centrality(spark: SparkSession, sf_dir: str, kind: str = "pagerank") -> DataFrame:
-    """Centrality (README.md:28): pagerank | degree | component | betweenness."""
+    """Centrality (README.md:28): pagerank | degree | component | betweenness.
+    Within the snapshot's gate pagerank, component and betweenness run the
+    kernels of ``graph_kernels`` on the hierarchy's edge arrays."""
     tables(spark, sf_dir)
+    g = graph_snapshot.arrays(spark, sf_dir, "hierarchy") if kind != "degree" else None
+    if g is not None:
+        return _centrality_kernel(spark, kind, *g[:3])
     edges = catalog.hierarchy_edges(spark, sf_dir)
     if kind == "pagerank":
         return pagerank(edges.select("src", "dst"), iters=10).select(
@@ -193,6 +208,23 @@ def centrality(spark: SparkSession, sf_dir: str, kind: str = "pagerank") -> Data
     return out_deg.join(in_deg, "node", "full").select(
         "node",
         (F.coalesce("out_deg", F.lit(0)) + F.coalesce("in_deg", F.lit(0))).alias("score"),
+    )
+
+
+def _centrality_kernel(spark: SparkSession, kind: str, nodes: pa.Array, src, dst) -> DataFrame:
+    """:func:`centrality`'s Spark path, row for row, on the edge arrays."""
+    n = len(nodes)
+    if kind == "pagerank":
+        score = graph_snapshot.rounded(spark, gk.pagerank(n, src, dst, iters=10))
+        return graph_snapshot.frame(spark, {"node": nodes, "score": score})
+    if kind == "component":
+        labels = nodes.take(gk.label_propagation(n, src, dst))
+        return graph_snapshot.frame(spark, {"node": nodes, "component": labels})
+    tier = pc.or_(pc.starts_with(nodes, "n:"), pc.starts_with(nodes, "r:"))
+    sources = np.flatnonzero(tier.to_numpy(zero_copy_only=False))
+    score, has_term = gk.brandes(n, src, dst, sources)
+    return graph_snapshot.frame(
+        spark, {"node": nodes.take(np.flatnonzero(has_term)), "score": gk.dround(score[has_term])}
     )
 
 
@@ -824,11 +856,45 @@ def export_graph_viz(
     neighborhood of ``entities`` as node rows (kind='node', a=id, hop) plus
     the directed edges with both endpoints inside it (kind='edge', a=src,
     b=dst, hop=-1). When ``path`` is given the frame is also written as a
-    JSON artifact (the serialization a viz front-end consumes)."""
-    from mimranalytics_core_spark.functions.graph_algos import bfs_distances, undirect
+    JSON artifact (the serialization a viz front-end consumes).
+
+    Within the snapshot's gate the BFS of :func:`expand_neighborhood` and
+    the induced edges come from the snapshot, so an export starts only its
+    write."""
     from mimranalytics_core_spark.sources.io import export_report
 
     tables(spark, sf_dir)
+    payload = _viz_kernel(spark, sf_dir, entities, hops)
+    if payload is None:
+        payload = _viz_spark(spark, sf_dir, entities, hops)
+    if path is not None:
+        export_report(payload, path, fmt="json", partition_by=["kind"])
+    return payload
+
+
+def _viz_kernel(spark: SparkSession, sf_dir: str, entities: list[str], hops: int):
+    """:func:`export_graph_viz`'s rows from the snapshot, or None."""
+    g = graph_snapshot.arrays(spark, sf_dir, "hierarchy")
+    dist = graph_snapshot.neighborhood(spark, sf_dir, entities, hops) if g else None
+    if dist is None:
+        return None
+    nodes, src, dst, _ = g
+    seen = pa.array(list(dist), nodes.type)
+    inside = np.zeros(len(nodes), bool)
+    inside[pc.index_in(seen, value_set=nodes).drop_null().to_numpy()] = True
+    keep = inside[src] & inside[dst]
+    pair = np.unique(src[keep] * len(nodes) + dst[keep])
+    a, b = pair // len(nodes), pair % len(nodes)
+    cols = {
+        "kind": ["node"] * len(seen) + ["edge"] * len(pair),
+        "a": pa.concat_arrays([seen, nodes.take(a)]),
+        "b": pa.concat_arrays([pa.array([""] * len(seen), nodes.type), nodes.take(b)]),
+        "hop": pa.array([*dist.values(), *[-1] * len(pair)], pa.int32()),
+    }
+    return graph_snapshot.frame(spark, cols, non_null=("kind", "hop"))
+
+
+def _viz_spark(spark: SparkSession, sf_dir: str, entities: list[str], hops: int) -> DataFrame:
     edges = catalog.hierarchy_edges(spark, sf_dir).select("src", "dst")
     seeds = spark.createDataFrame([(e,) for e in entities], "node STRING")
     nodes = bfs_distances(undirect(edges), seeds, max_depth=hops)
@@ -838,7 +904,7 @@ def export_graph_viz(
         .join(keep.withColumnRenamed("node", "dst"), "dst", "left_semi")
         .distinct()
     )
-    payload = nodes.select(
+    return nodes.select(
         F.lit("node").alias("kind"),
         F.col("node").alias("a"),
         F.lit("").alias("b"),
@@ -851,6 +917,3 @@ def export_graph_viz(
             F.lit(-1).cast("int").alias("hop"),
         )
     )
-    if path is not None:
-        export_report(payload, path, fmt="json", partition_by=["kind"])
-    return payload

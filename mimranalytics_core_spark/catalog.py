@@ -23,6 +23,7 @@ import functools
 import os
 from typing import NamedTuple
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,15 +43,15 @@ from pyspark.sql import functions as F
 # cached (same class as operators/_base.py's table cache).
 # ---------------------------------------------------------------------------
 _VIEW_CACHE: dict[tuple, DataFrame] = {}
-# Invariant (round-16, ADVICE): the key's id(session) component is only
-# unique while the session object is alive — and it IS kept alive, because
-# every cached DataFrame pins its SparkSession. Entries are therefore never
-# reclaimed in a long-lived process that churns sessions/sf_dirs; callers
-# that cycle many sessions should call :func:`clear_view_cache` on session
-# teardown. For the engine's own lifecycles (one session per bench/driver
-# process, <= a few sf_dirs) the cache stays tens of entries.
+# The key's id(session) component is only unique while the session object
+# is alive — and it IS kept alive, because every cached DataFrame pins its
+# SparkSession. So creating an entry first drops the entries of a stopped
+# SparkContext (:func:`drop_stopped`): a process that stops its session and
+# starts another reclaims the old plans and snapshots. Sessions of one live
+# context (``newSession``) share it and keep their entries until
+# :func:`clear_view_cache`.
 
-# Driver-side hierarchy snapshots (functions/graph_snapshot.py), keyed like
+# Driver-side graph snapshots (functions/graph_snapshot.py), keyed like
 # the views per (session, sf_dir). They live and die with the view plans
 # above, so a snapshot is never staler than the Spark path it stands in for.
 _SNAPSHOT_CACHE: dict[tuple, object] = {}
@@ -61,6 +62,15 @@ def clear_view_cache() -> None:
     the graph snapshots built beside them."""
     _VIEW_CACHE.clear()
     _SNAPSHOT_CACHE.clear()
+
+
+def drop_stopped(cache: dict) -> None:
+    """Drop the entries of ``cache`` (keys start with (applicationId,
+    id(session))) whose SparkContext is no longer the active one."""
+    sc = SparkContext._active_spark_context
+    live = sc.applicationId if sc is not None and sc._jsc is not None else None
+    for key in [k for k in list(cache) if k[0][0] != live]:
+        cache.pop(key, None)
 
 
 def _memo_view(fn):
@@ -87,6 +97,7 @@ def _memo_view(fn):
 
         tables(spark, sf_dir)
         if key not in _VIEW_CACHE:
+            drop_stopped(_VIEW_CACHE)
             _VIEW_CACHE[key] = fn(spark, sf_dir, *args, **kwargs)
         return _VIEW_CACHE[key]
 

@@ -1,35 +1,41 @@
-"""Driver-side snapshot of the graph views for interactive requests.
+"""Driver-side snapshot of the graph views for interactive and nightly calls.
 
-At interactive scale a Spark traversal costs per-job overhead, not compute:
-a dozen or more jobs and 0.6–2 s per request over a few thousand edges,
-where an in-process traversal takes well under a millisecond. Below the
-gates (:data:`MAX_EDGES`, :data:`MAX_SEEDS`, :data:`MAX_PATH_ROWS`) this
-module answers such calls from the edge views held in the driver — the
-reference's own single-heap NetworkX step. Each view (``hierarchy``,
+At these sizes a Spark graph call costs per-job overhead, not compute:
+from a dozen to ~90 jobs and 0.6–9 s over a few thousand edges, where the
+in-process kernels of ``functions/graph_kernels.py`` take milliseconds.
+Below the gates (:data:`MAX_EDGES`, :data:`MAX_SEEDS`,
+:data:`MAX_PATH_ROWS`) this module answers such calls from the edge views
+held in the driver — the reference's own single-heap NetworkX step. It
+holds the gates, the memo and the frames; the callers in ``api`` and
+``operators/graph.py`` compose the kernels. Each view (``hierarchy``,
 ``trade_credit``) is fetched once by one ``toArrow()`` of its typed edge
-table; the rest derives from it lazily, under one lock:
+table; the rest derives from it on first use, under one lock:
 
-- the hierarchy's undirected adjacency (``api.expand_neighborhood``), a
-  level BFS with ``graph_algos.bfs_distances`` semantics;
-- the closure per ``max_depth`` (``api.ubo_report``): the Spark
-  ``ubo_closure`` at threshold 0, rounded and ordered like the Spark path,
-  with the unrounded column kept for each request's filter;
+- the undirected adjacency (:func:`neighborhood`: ``/expand`` and the
+  graph-viz BFS), with ``graph_algos.bfs_distances`` semantics;
 - the seek index (``api.shortest_paths``, ``api.match_path``): per-node
-  edge indices (:class:`SeekGraph`) and node LocalRelations over which
-  ``src_pred`` picks the seeds with no job (``ConvertToLocalRelation``).
+  edge indices (``SeekGraph``) and node LocalRelations over which
+  ``src_pred`` picks the seeds with no job (``ConvertToLocalRelation``);
+- the integer-indexed edge arrays (:func:`arrays`) that the whole-graph
+  kernels run on, outside the lock: centrality, cycles, graph-viz edges,
+  ``graph_risk_score``, ``graph_scc``, and the UBO closure per
+  ``max_depth`` (:func:`ubo`), kept at threshold 0 with the unrounded
+  column for each request's filter.
 
 Results are ``spark.createDataFrame(pyarrow.Table)`` frames, job-free
-``LocalTableScan``s with the Spark path's schema. An entry point returning
-None means: take the Spark path, the scale path and the tests' reference.
+``LocalTableScan``s with the Spark path's schema, nullability included;
+:func:`rounded` gives ``F.round``'s digits. An entry point returning None
+means: take the Spark path, the scale path and the tests' reference.
 Entries are keyed per (session, sf_dir) in ``catalog._SNAPSHOT_CACHE``;
-``catalog.clear_view_cache()`` drops them.
+``catalog.clear_view_cache()`` drops them, and creating one drops those
+of a stopped SparkContext.
 """
 
 from __future__ import annotations
 
 import threading
-from typing import Callable
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.errors.exceptions.captured import CapturedException
@@ -37,6 +43,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mimranalytics_core_spark import catalog
+from mimranalytics_core_spark.functions.graph_kernels import (
+    SeekGraph,
+    adjacency,
+    bfs,
+    half_up,
+    index,
+    walk_sum,
+)
 from mimranalytics_core_spark.functions.hints import source_rows
 from mimranalytics_core_spark.operators._base import _session_key, tables
 
@@ -44,9 +58,10 @@ from mimranalytics_core_spark.operators._base import _session_key, tables
 # hierarchy the customer + supplier + nation parquet footer rows (no job;
 # unknown = Spark path), for the trade-credit view (keys < 50 by its
 # declared semantics) the fetched table's rows. At this size the
-# hierarchy's typed table, adjacency, seek index and node relation hold
-# ~175 MiB of driver memory and the depth-6 closure ~16 MiB of Arrow
-# buffers (README "Serving and the API"); sf1 (160,025 edges) is inside.
+# hierarchy's typed table, adjacency, seek index, node relation and edge
+# arrays hold ~180 MiB of driver memory and the depth-6 closure ~16 MiB of
+# Arrow buffers (README "Serving and the API"); sf1 (160,025 edges) is
+# inside.
 MAX_EDGES = 250_000
 # Most seeds a seek answers from the snapshot: bound ids and short id
 # lists. A label scan (25 nations, 50 trade-credit customers) selects more
@@ -71,15 +86,16 @@ _LOCK = threading.Lock()
 
 
 class _View:
-    """One view's typed edge table; the adjacency (expand) and the seek
-    index (:func:`_seek_index`) are derived from it on first use."""
+    """One view's typed edge table; the adjacency, the seek index
+    (:func:`_seek_index`) and the edge arrays are derived on first use."""
 
-    __slots__ = ("tbl", "src", "dst", "undirected", "seek")
+    __slots__ = ("tbl", "src", "dst", "undirected", "seek", "arrays")
 
     def __init__(self, tbl: pa.Table) -> None:
         self.tbl, self.src, self.dst = tbl, tbl["src"].to_pylist(), tbl["dst"].to_pylist()
         self.undirected: dict[str, list[str]] | None = None
         self.seek: tuple | None = None
+        self.arrays: tuple | None = None
 
 
 class _Snapshot:
@@ -91,34 +107,7 @@ class _Snapshot:
         self.n_edges, self.views, self.closures = n_edges, {}, {}
 
 
-# kernels (pure; tests/test_graph_snapshot.py checks them against Spark)
-
-
-def adjacency(src: list[str], dst: list[str]) -> dict[str, list[str]]:
-    """Undirected adjacency of a directed edge list (parallel edges kept;
-    the BFS visits each node once regardless)."""
-    adj: dict[str, list[str]] = {}
-    for s, d in zip(src, dst):
-        adj.setdefault(s, []).append(d)
-        adj.setdefault(d, []).append(s)
-    return adj
-
-
-def bfs(adj: dict[str, list[str]], seeds: list[str], hops: int) -> dict[str, int]:
-    """Min-hop distance ≤ ``hops`` from ``seeds``, in discovery order."""
-    dist = dict.fromkeys(seeds, 0)
-    frontier = list(dist)
-    for level in range(1, hops + 1):
-        nxt = []
-        for node in frontier:
-            for m in adj.get(node, ()):
-                if m not in dist:
-                    dist[m] = level
-                    nxt.append(m)
-        if not nxt:
-            break
-        frontier = nxt
-    return dist
+# frames
 
 
 def expand_table(dist: dict[str, int]) -> pa.Table:
@@ -130,16 +119,39 @@ def expand_table(dist: dict[str, int]) -> pa.Table:
     )
 
 
+def rounded(spark: SparkSession, x: np.ndarray, digits: int = 6) -> np.ndarray:
+    """``x`` with the Spark path's ``F.round(x, digits)`` digits:
+    ``graph_kernels.half_up``, and the few values within ulps of a tie
+    rounded by Spark over a local frame (no job)."""
+    out, unsure = half_up(x, digits)
+    if unsure.any():
+        local = spark.createDataFrame(pa.table({"x": x[unsure]}))
+        out[unsure] = [r[0] for r in local.select(F.round("x", digits)).collect()]
+    return out
+
+
+def frame(spark: SparkSession, cols: dict, non_null: tuple = ()) -> DataFrame:
+    """A local frame of ``cols`` (name → array), every column nullable but
+    ``non_null``, as the Spark path's schema has it."""
+    arrays = [pa.array(v) for v in cols.values()]
+    fields = [pa.field(k, a.type, k not in non_null) for k, a in zip(cols, arrays)]
+    return spark.createDataFrame(pa.table(arrays, schema=pa.schema(fields)))
+
+
 def closure_table(closure: DataFrame) -> pa.Table:
-    """One collect of an (owner, entity, effective_ownership) closure:
-    Spark rounds (so the digits match the Spark path's ``F.round``), Arrow
-    orders like the Spark path's ``orderBy``, and the unrounded value rides
-    along for the per-request threshold."""
-    tbl = closure.select(
-        "owner", "entity", F.round("effective_ownership", 6).alias("effective_ownership"),
-        F.col("effective_ownership").alias(_RAW),
-    ).toArrow()
-    return tbl.sort_by(_UBO_ORDER)
+    """The UBO memo table of an (owner, entity, effective_ownership)
+    frame: the Spark ``ubo_closure``'s form, which the tests hold
+    :func:`ubo`'s kernel-built table to."""
+    tbl = closure.select("owner", "entity", "effective_ownership").toArrow()
+    return _ordered(closure.sparkSession, tbl.column(0), tbl.column(1), tbl.column(2).to_numpy())
+
+
+def _ordered(spark: SparkSession, owner, entity, raw: np.ndarray) -> pa.Table:
+    """Closure rows rounded like the Spark path's ``F.round(…, 6)`` and
+    ordered like its ``orderBy``; the unrounded value rides along for the
+    per-request threshold."""
+    cols = {"owner": owner, "entity": entity, "effective_ownership": rounded(spark, raw), _RAW: raw}
+    return pa.table(cols).sort_by(_UBO_ORDER)
 
 
 def at_threshold(closure: pa.Table, threshold: float) -> pa.Table:
@@ -148,93 +160,7 @@ def at_threshold(closure: pa.Table, threshold: float) -> pa.Table:
     return closure.filter(keep).drop_columns([_RAW])
 
 
-class SeekGraph:
-    """A typed directed edge list indexed for bounded traversals from a few
-    seeds: per node, the indices of its out- and in-edges. ``types`` below
-    is a set of ``rel_type`` values or None (any type)."""
-
-    def __init__(self, src: list, dst: list, rel: list, weight: list) -> None:
-        self.src, self.dst, self.rel, self.weight = src, dst, rel, weight
-        # path_rows' trail guard keys a relationship by its (src, dst) pair
-        pairs: dict = {}
-        self.key = [pairs.setdefault(p, len(pairs)) for p in zip(src, dst)]
-        self.out: dict = {}
-        self.inc: dict = {}
-        for i, (s, d) in enumerate(zip(src, dst)):
-            self.out.setdefault(s, []).append(i)
-            self.inc.setdefault(d, []).append(i)
-
-    def steps(self, node, types, direction: str):
-        """(next node, edge index) for each edge leaving ``node`` in the
-        ``direction`` view; ``both`` keeps each original edge as one step
-        from either endpoint (a self-loop is two)."""
-        if direction != "in":
-            for i in self.out.get(node, ()):
-                if types is None or self.rel[i] in types:
-                    yield self.dst[i], i
-        if direction != "out":
-            for i in self.inc.get(node, ()):
-                if types is None or self.rel[i] in types:
-                    yield self.src[i], i
-
-    def distances(self, seeds, types, direction, min_hops, max_hops, budget):
-        """``multi_source_distances`` rows (source, node, dist) with
-        ``min_hops <= dist <= max_hops``, from each seed that is a source of
-        the directed view; None past ``budget`` rows."""
-        rows = []
-        for s in dict.fromkeys(seeds):
-            if next(self.steps(s, types, direction), None) is None:
-                continue
-            dist = {s: 0}
-            frontier = [s]
-            for level in range(1, max_hops + 1):
-                nxt = []
-                for node in frontier:
-                    for m, _ in self.steps(node, types, direction):
-                        if m not in dist:
-                            dist[m] = level
-                            nxt.append(m)
-                if not nxt:
-                    break
-                frontier = nxt
-            rows += [(s, n, d) for n, d in dist.items() if d >= min_hops]
-            if len(rows) > budget:
-                return None
-        return rows
-
-    def paths(self, seeds, types, direction, min_hops, max_hops, unique, budget):
-        """``path_rows`` rows (src, dst, hops, Π weight, Σ weight), one per
-        path of ``min_hops..max_hops`` edges from each seed; with ``unique``
-        no (src, dst) relationship repeats along a path (trail). None once
-        more than ``budget`` paths of any length are enumerated."""
-        rows = []
-        n = 0
-        for s in dict.fromkeys(seeds):
-            stack = [(s, 0, None, None, ())]
-            while stack:
-                node, hops, pw, pcost, used = stack.pop()
-                for m, i in self.steps(node, types, direction):
-                    k = self.key[i]
-                    if unique and k in used:
-                        continue
-                    w = self.weight[i]
-                    if not hops:
-                        w_m = c_m = w
-                    elif w is None or pw is None:  # Spark arithmetic: null in, null out
-                        w_m = c_m = None
-                    else:
-                        w_m, c_m = pw * w, pcost + w
-                    n += 1
-                    if n > budget:
-                        return None
-                    if hops + 1 >= min_hops:
-                        rows.append((s, m, hops + 1, w_m, c_m))
-                    if hops + 1 < max_hops:
-                        stack.append((m, hops + 1, w_m, c_m, used + (k,)))
-        return rows
-
-
-# gated entry points for api.py (None = take the Spark path)
+# gated entry points (None = take the Spark path)
 
 
 def _entry(spark: SparkSession, sf_dir: str) -> _Snapshot:
@@ -243,6 +169,7 @@ def _entry(spark: SparkSession, sf_dir: str) -> _Snapshot:
     key = (_session_key(spark), sf_dir)
     snap = catalog._SNAPSHOT_CACHE.get(key)
     if snap is None:
+        catalog.drop_stopped(catalog._SNAPSHOT_CACHE)
         tbls = tables(spark, sf_dir)
         counts = [source_rows(tbls[name]) for name in ("customer", "supplier", "nation")]
         snap = _Snapshot(None if None in counts else sum(counts))
@@ -267,8 +194,24 @@ def _view(spark: SparkSession, sf_dir: str, graph: str) -> _View | None:
     return view if view.tbl.num_rows <= MAX_EDGES else None
 
 
-def expand(spark: SparkSession, sf_dir: str, entities: list[str], hops: int) -> DataFrame | None:
-    """``api.expand_neighborhood`` from the snapshot, or None above the gate."""
+def arrays(spark: SparkSession, sf_dir: str, graph: str) -> tuple | None:
+    """(sorted node ids, src indices, dst indices, typed edge table) of
+    ``graph`` for the whole-graph kernels, or None over the gate, for an
+    empty view or one with a null id."""
+    with _LOCK:
+        view = _view(spark, sf_dir, graph)
+        if view is None:
+            return None
+        if view.arrays is None:
+            tbl = view.tbl
+            ok = tbl.num_rows and not (tbl["src"].null_count or tbl["dst"].null_count)
+            view.arrays = (*index(tbl["src"], tbl["dst"]), tbl) if ok else ()
+        return view.arrays or None
+
+
+def neighborhood(spark: SparkSession, sf_dir: str, entities: list[str], hops: int) -> dict | None:
+    """Min-hop distance ≤ ``hops`` from ``entities`` on the undirected
+    hierarchy, or None above the gate."""
     with _LOCK:
         view = _view(spark, sf_dir, "hierarchy")
         if view is None:
@@ -276,23 +219,34 @@ def expand(spark: SparkSession, sf_dir: str, entities: list[str], hops: int) -> 
         if view.undirected is None:
             view.undirected = adjacency(view.src, view.dst)
         adj = view.undirected
-    return spark.createDataFrame(expand_table(bfs(adj, entities, hops)))
+    return bfs(adj, entities, hops)
 
 
-def ubo(
-    spark: SparkSession, sf_dir: str, threshold: float, max_depth: int,
-    closure: Callable[[], DataFrame],
-) -> DataFrame | None:
-    """``api.ubo_report`` from the snapshot, or None above the gate.
-    ``closure()`` builds the threshold-0 Spark closure on the first call
-    for this ``max_depth``."""
+def expand(spark: SparkSession, sf_dir: str, entities: list[str], hops: int) -> DataFrame | None:
+    """``api.expand_neighborhood`` from the snapshot, or None above the gate."""
+    dist = neighborhood(spark, sf_dir, entities, hops)
+    return None if dist is None else spark.createDataFrame(expand_table(dist))
+
+
+def ubo(spark: SparkSession, sf_dir: str, threshold: float, max_depth: int) -> DataFrame | None:
+    """``api.ubo_report`` from the snapshot, or None above the gate: the
+    closure of ``graph_kernels.walk_sum`` from the customer owners at
+    threshold 0, built once per ``max_depth``."""
     with _LOCK:
         snap = _entry(spark, sf_dir)
-        if not _within_gate(snap):
+        tbl = snap.closures.get(max_depth) if _within_gate(snap) else None
+    if tbl is None:
+        g = arrays(spark, sf_dir, "hierarchy")
+        if g is None:
             return None
-        if max_depth not in snap.closures:
-            snap.closures[max_depth] = closure_table(closure())
-        tbl = snap.closures[max_depth]
+        nodes, src, dst, edges = g
+        weight = edges["weight"].to_numpy()  # nulls → NaN
+        owners = src[pc.equal(edges["rel_type"], "customer_of").to_numpy(zero_copy_only=False)]
+        o, e, raw = walk_sum(len(nodes), src, dst, weight, owners, max_depth)
+        keep = raw >= 0.0  # the Spark path's threshold-0 filter
+        tbl = _ordered(spark, nodes.take(o[keep]), nodes.take(e[keep]), raw[keep])
+        with _LOCK:
+            tbl = snap.closures.setdefault(max_depth, tbl)
     return spark.createDataFrame(at_threshold(tbl, threshold))
 
 

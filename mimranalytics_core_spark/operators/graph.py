@@ -25,10 +25,13 @@ O(walks) and is deliberately not declared.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from mimranalytics_core_spark import catalog
+from mimranalytics_core_spark.functions import graph_kernels as gk
+from mimranalytics_core_spark.functions import graph_snapshot
 from mimranalytics_core_spark.operators._base import t, tables
 from mimranalytics_core_spark.plans.pregel import iterate_fixpoint
 from mimranalytics_core_spark.registry import register
@@ -1681,16 +1684,36 @@ def cypher_all_shortest_paths(spark, sf_dir):
         "superstep, NOT walk enumeration — terminates on cycles) via the "
         "Pregel harness; the closure pair-set is bounded by the declared "
         "subgraph (|V|^2 <= ~10k). Oracle: DuckDB recursive UNION-distinct "
-        "closure + identical min-mutual-reach formula"
+        "closure + identical min-mutual-reach formula. Within "
+        "graph_snapshot.MAX_EDGES the same 13-hop closure runs in-process "
+        "on the snapshot's edge arrays (scc_kernel: graph_kernels."
+        "reach_closure), so the op starts no job; scc_spark stays the "
+        "scale path"
     ),
 )
 def graph_scc(spark, sf_dir):
     tables(spark, sf_dir)
-    e = (
-        catalog.trade_credit_edges(spark, sf_dir)
-        .select("src", "dst")
-        .localCheckpoint(eager=True)  # static edges: scanned every superstep
-    )
+    g = graph_snapshot.arrays(spark, sf_dir, "trade_credit")
+    if g is not None:
+        return graph_snapshot.frame(spark, scc_kernel(*g[:3]))
+    return scc_spark(catalog.trade_credit_edges(spark, sf_dir))
+
+
+def scc_kernel(nodes, src, dst) -> dict:
+    """:func:`scc_spark`'s columns on the snapshot's edge arrays: the same
+    13-hop closure (the edges plus 12 extension supersteps)."""
+    n = len(nodes)
+    reach = gk.reach_closure(n, src, dst, max_hops=13)
+    a, b = reach // n, reach % n
+    mutual = np.isin(b * n + a, reach)
+    scc = np.arange(n)
+    np.minimum.at(scc, a[mutual], b[mutual])
+    return {"node": nodes, "scc_id": nodes.take(scc)}
+
+
+def scc_spark(edges):
+    """graph_scc's Spark path over a (src, dst, ...) edge frame."""
+    e = edges.select("src", "dst").localCheckpoint(eager=True)  # scanned every superstep
 
     def step(reach):
         # closure by single-edge extension. Recursive DOUBLING (reach ⋈
@@ -2727,19 +2750,47 @@ def _risk_oracle_sql(iters: int = 10, damping: float = 0.85) -> str:
         "as graph_cycles; every operand is dround'd (ranks) or integer "
         "(degrees, membership) BEFORE the one float combination, so both "
         "engines combine identical bits. Max-normalizers ride a broadcast "
-        "scalar — nothing leaves the plan"
+        "scalar — nothing leaves the plan. Within graph_snapshot.MAX_EDGES "
+        "the same operands come from the in-process kernels shared with "
+        "api.centrality and api.circular_ownership (risk_kernel: "
+        "graph_kernels.pagerank and cycle_members on the snapshot's edge "
+        "arrays), so the op starts no job; risk_spark stays the scale path"
     ),
 )
 def graph_risk_score(spark, sf_dir):
+    tables(spark, sf_dir)
+    g = graph_snapshot.arrays(spark, sf_dir, "trade_credit")
+    if g is not None:
+        return graph_snapshot.frame(spark, risk_kernel(*g[:3]), non_null=("degree", "on_cycle"))
+    return risk_spark(catalog.trade_credit_edges(spark, sf_dir))
+
+
+def risk_kernel(nodes, src, dst) -> dict:
+    """:func:`risk_spark`'s columns, operand for operand, on the snapshot's
+    edge arrays: the same pagerank, degree and depth-4 cycle membership on
+    the distinct edges, combined in the same double arithmetic."""
+    n = len(nodes)
+    pair = np.unique(src * n + dst)
+    src, dst = pair // n, pair % n
+    pr = gk.dround(gk.pagerank(n, src, dst, iters=10))
+    degree = np.bincount(src, minlength=n) + np.bincount(dst, minlength=n)
+    on_cycle = gk.cycle_members(n, src, dst, max_len=4)
+    risk = (
+        0.5 * (pr / pr.max())
+        + 0.3 * (degree.astype(float) / float(degree.max()))
+        + 0.2 * np.where(on_cycle, 1.0, 0.0)
+    )
+    return {
+        "node": nodes, "pr": pr, "degree": degree.astype(np.int64),
+        "on_cycle": on_cycle, "risk_score": gk.dround(risk),
+    }
+
+
+def risk_spark(edges):
+    """graph_risk_score's Spark path over a (src, dst, ...) edge frame."""
     from mimranalytics_core_spark.functions.graph_algos import pagerank
 
-    tables(spark, sf_dir)
-    tc = (
-        catalog.trade_credit_edges(spark, sf_dir)
-        .select("src", "dst")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    tc = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
     pr = pagerank(tc, iters=10, state_partitions=8).select(
         "node", (F.floor(F.col("rank") * 1e6 + F.lit(0.5)) / 1e6).alias("pr")
     )

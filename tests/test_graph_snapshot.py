@@ -5,16 +5,21 @@ Spark path on the small fixture with the gate forced both ways."""
 
 from __future__ import annotations
 
+import os
 import random
+import subprocess
 import sys
 import threading
 
+import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from mimranalytics_core_spark import api, catalog
 from mimranalytics_core_spark.catalog import decode_id_sql
 from mimranalytics_core_spark.functions import graph_algos
+from mimranalytics_core_spark.functions import graph_kernels as gk
 from mimranalytics_core_spark.functions import graph_snapshot as gs
 from mimranalytics_core_spark.functions.graph_algos import (
     bfs_distances,
@@ -23,6 +28,8 @@ from mimranalytics_core_spark.functions.graph_algos import (
     ubo_closure,
     undirect,
 )
+from mimranalytics_core_spark.operators import graph as graph_ops
+from mimranalytics_core_spark.registry import all_ops
 from tests.conftest import SF_SMALL
 
 TIERS = {"c": 40, "s": 10, "n": 6, "r": 2}
@@ -420,3 +427,259 @@ def test_explain_of_gated_seek_is_a_local_table_scan(spark, monkeypatch):
     monkeypatch.setattr(gs, "MAX_SEEDS", -1)
     plan = _explain_text(api.cypher(spark, SF_SMALL, q, params={"id": "c:9"}))
     assert "Scan parquet" in plan and "LocalTableScan" not in plan
+
+
+# ---------------------------------------------------------------------------
+# whole-graph kernels (graph_kernels) against their Spark functions
+# ---------------------------------------------------------------------------
+
+MAX_LEN = 4
+
+
+def _digraph(seed: int) -> list[tuple[str, str, float | None]]:
+    """A seeded random digraph with parallel edges, self-loops, dangling
+    nodes (in-edges only), several components, a 25-edge path (longer
+    than connected_components' max_iter=20), a 15-edge ring (longer than
+    graph_scc's 13 hops), cycles of every length 1..MAX_LEN + 1 and a null
+    weight."""
+    rng = random.Random(seed)
+    blob = [f"c:{i}" for i in range(14)]
+    edges = [tuple(rng.sample(blob, 2)) for _ in range(30)]
+    edges += [edges[0], edges[3], ("c:2", "c:2"), ("c:5", "c:5")]  # parallel edges, self-loops
+    edges += [(rng.choice(blob), f"sink:{i}") for i in range(3)]  # dangling
+    edges += [(f"p:{i:02d}", f"p:{i + 1:02d}") for i in range(25)]  # long path
+    edges += [(f"r:{i:02d}", f"r:{(i + 1) % 15:02d}") for i in range(15)]  # long ring
+    for k in range(1, MAX_LEN + 2):  # one cycle of each length
+        edges += [(f"k{k}:{i}", f"k{k}:{(i + 1) % k}") for i in range(k)]
+    weighted = [(s, d, round(rng.uniform(0.05, 0.9), 3)) for s, d in edges]
+    weighted[1] = (*weighted[1][:2], None)
+    return weighted
+
+
+def _arrays(edges):
+    src = pa.chunked_array([pa.array([s for s, _, _ in edges], pa.string())])
+    dst = pa.chunked_array([pa.array([d for _, d, _ in edges], pa.string())])
+    return gk.index(src, dst)
+
+
+def _edge_df(spark, edges):
+    return spark.createDataFrame(edges, "src STRING, dst STRING, weight DOUBLE")
+
+
+SEEDS = [7, 41]
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_pagerank_kernel_matches_spark(spark, seed):
+    edges = _digraph(seed)
+    nodes, src, dst = _arrays(edges)
+    ref = graph_algos.pagerank(_edge_df(spark, edges).select("src", "dst"), iters=10)
+    want = {r.node: r.rank for r in ref.collect()}
+    rank = gk.pagerank(len(nodes), src, dst, iters=10)
+    got = dict(zip(nodes.to_pylist(), rank))
+    assert set(got) == set(want)
+    # sums run in another order: ranks agree to 1e-12 (relative), and the
+    # declared F.round(rank, 6) digits are identical
+    assert all(abs(got[k] - want[k]) <= 1e-12 * want[k] for k in want)
+    spark_digits = dict(
+        (r.node, r.r) for r in ref.select("node", F.round("rank", 6).alias("r")).collect()
+    )
+    assert dict(zip(nodes.to_pylist(), gs.rounded(spark, rank))) == spark_digits
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_label_propagation_matches_connected_components(spark, seed):
+    edges = _digraph(seed)
+    nodes, src, dst = _arrays(edges)
+    ref = graph_algos.connected_components(_edge_df(spark, edges))
+    want = {r.node: r.component for r in ref.collect()}
+    labels = nodes.take(gk.label_propagation(len(nodes), src, dst))
+    got = dict(zip(nodes.to_pylist(), labels.to_pylist()))
+    assert got == want
+    # the 25-edge path is cut at 20 rounds, as in Spark
+    assert got["p:25"] == "p:05" and got["p:00"] == "p:00"
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_brandes_kernel_matches_spark_betweenness(spark, seed):
+    edges = _digraph(seed)
+    nodes, src, dst = _arrays(edges)
+    ids = nodes.to_pylist()
+    picked = ["c:0", "c:3", "p:10", "r:00", "k3:0", "sink:1"]
+    und = undirect(_edge_df(spark, edges).select("src", "dst"))
+    sources = spark.createDataFrame([(p,) for p in picked], "node STRING")
+    want = {r.node: r.betweenness for r in graph_algos.betweenness(und, sources).collect()}
+    score, has_term = gk.brandes(len(nodes), src, dst, np.array([ids.index(p) for p in picked]))
+    # the row set: only nodes some other source gave a backward-phase term
+    # (a leaf such as sink:1 as a source, or an unreached node, has none)
+    got = {ids[i]: v for i, v in zip(np.flatnonzero(has_term), gk.dround(score[has_term]))}
+    # δ sums run in another order (agreeing to ~1e-12); after the
+    # declared floor(x·1e6 + 0.5) / 1e6 the rows are identical
+    assert got == want
+    assert "sink:1" not in got and "p:25" not in got
+
+
+def _walk_sql(view: str, max_len: int) -> str:
+    """api.circular_ownership's recursive walk over a (src, dst) view."""
+    return f"""
+        WITH RECURSIVE walk(origin, node, depth) AS (
+            SELECT src AS origin, dst AS node, 1 AS depth FROM {view}
+            UNION ALL
+            SELECT w.origin, e.dst, w.depth + 1
+            FROM walk w JOIN {view} e ON e.src = w.node
+            WHERE w.depth < {max_len} AND w.node <> w.origin
+        )
+        SELECT DISTINCT origin AS entity_on_cycle FROM walk WHERE node = origin"""
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_cycle_kernel_matches_spark_walk(spark, seed):
+    edges = _digraph(seed)
+    nodes, src, dst = _arrays(edges)
+    _edge_df(spark, edges).createOrReplaceTempView("kernel_test_edges")
+    for max_len in range(1, MAX_LEN + 2):
+        ref = spark.sql(_walk_sql("kernel_test_edges", max_len))
+        want = {r.entity_on_cycle for r in ref.collect()}
+        hit = gk.cycle_members(len(nodes), src, dst, max_len)
+        got = set(nodes.take(np.flatnonzero(hit)).to_pylist())
+        assert got == want, max_len
+        # a cycle of length k is found exactly from max_len = k on
+        for k in range(1, MAX_LEN + 2):
+            assert (f"k{k}:0" in got) == (k <= max_len)
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_registered_op_kernels_match_their_spark_form(spark, seed):
+    """graph_scc's closure (13 hops: the 15-edge ring is not one SCC) and
+    graph_risk_score's operands, kernel form against Spark form."""
+    edges = _digraph(seed)
+    nodes, src, dst = _arrays(edges)
+    df = _edge_df(spark, edges)
+    scc = graph_ops.scc_kernel(nodes, src, dst)
+    got = dict(zip(scc["node"].to_pylist(), scc["scc_id"].to_pylist()))
+    assert got == {r.node: r.scc_id for r in graph_ops.scc_spark(df).collect()}
+    # r:01 reaches r:00 in 14 hops only; a full SCC would label it r:00
+    assert got["r:01"] == "r:01" and got["r:07"] == "r:00" and got["k5:4"] == "k5:0"
+    risk = graph_ops.risk_kernel(nodes, src, dst)
+    rows = zip(*(pa.array(v).to_pylist() for v in risk.values()))
+    # pagerank sums in another order; after floor(x·1e6 + 0.5) / 1e6 the
+    # rows are identical
+    assert sorted(rows) == sorted(tuple(r) for r in graph_ops.risk_spark(df).collect())
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_walk_sum_matches_spark_ubo_closure(spark, seed):
+    edges = _digraph(seed)
+    nodes, src, dst = _arrays(edges)
+    weight = np.array([np.nan if w is None else w for _, _, w in edges])
+    df = _edge_df(spark, edges)
+    for depth in (1, 3, 6):
+        ref = ubo_closure(df, max_depth=depth, threshold=0.0)
+        o, e, v = gk.walk_sum(len(nodes), src, dst, weight, src, depth)
+        ids = nodes.to_pylist()
+        got = {(ids[a], ids[b]): x for a, b, x in zip(o, e, v)}
+        want = {(r.owner, r.entity): r.effective_ownership for r in ref.collect()}
+        assert set(got) == set(want), depth
+        # walks are summed level by level, not walk by walk: values agree
+        # to 1e-12 (relative); the memo table's F.round digits and order
+        # are the Spark path's
+        assert all(abs(got[k] - want[k]) <= 1e-12 * abs(want[k]) for k in want)
+        mine = gs._ordered(spark, nodes.take(o), nodes.take(e), v).drop_columns([gs._RAW])
+        theirs = (
+            ref.select("owner", "entity", F.round("effective_ownership", 6).alias("eo"))
+            .orderBy(F.col("eo").desc(), "owner", "entity")
+            .collect()
+        )
+        assert [tuple(r) for r in theirs] == list(zip(*(c.to_pylist() for c in mine.columns)))
+
+
+def test_rounded_matches_spark_round(spark):
+    """half_up decides from the binary value; ties within a few ulps go to
+    Spark's F.round (over a local frame) — together they are F.round."""
+    rng = np.random.default_rng(5)
+    ties = (np.arange(-200, 200) + 0.5) / 1e6  # x.xxxxxx5: decimal ties
+    x = np.concatenate(
+        [rng.random(2000), rng.random(200) * 1e4, ties, ties * 7, [0.0, -0.0, 2.5e-7, 1e-12, 4e9]]
+    )
+    out, unsure = gk.half_up(x, 6)
+    # random values are decided from the binary value; the decimal ties are not
+    assert not unsure[:2200].any() and unsure[2200:3000].all()
+    local = spark.createDataFrame(pa.table({"x": x}))
+    want = [r[0] for r in local.select(F.round("x", 6)).collect()]
+    assert gs.rounded(spark, x).tolist() == want
+
+
+# ---------------------------------------------------------------------------
+# the gated batch reports against the Spark path on SF_SMALL
+# ---------------------------------------------------------------------------
+
+BATCH = [
+    ("pagerank", lambda s: api.centrality(s, SF_SMALL, "pagerank")),
+    ("component", lambda s: api.centrality(s, SF_SMALL, "component")),
+    ("betweenness", lambda s: api.centrality(s, SF_SMALL, "betweenness")),
+    ("circular", lambda s: api.circular_ownership(s, SF_SMALL, 4)),
+    ("circular-2", lambda s: api.circular_ownership(s, SF_SMALL, 2)),
+    ("viz", lambda s: api.export_graph_viz(s, SF_SMALL, ["n:1", "c:3", "zz:9"], 2)),
+    ("viz-0", lambda s: api.export_graph_viz(s, SF_SMALL, ["r:0"], 0)),
+    ("ubo", lambda s: api.ubo_report(s, SF_SMALL, 0.01)),
+    ("risk", lambda s: all_ops()["graph_risk_score"].fn(s, SF_SMALL)),
+    ("scc", lambda s: all_ops()["graph_scc"].fn(s, SF_SMALL)),
+]
+
+
+@pytest.mark.parametrize("label,call", BATCH, ids=[b[0] for b in BATCH])
+def test_batch_reports_gate_both_ways(spark, monkeypatch, label, call):
+    ref, snap = _both_ways(monkeypatch, lambda: call(spark))
+    assert snap.schema == ref.schema
+    assert [f.nullable for f in snap.schema] == [f.nullable for f in ref.schema]
+    want = ref.collect()
+    got = snap.collect()
+    if label == "ubo":  # ordered like the Spark path
+        assert got == want
+    assert sorted(got, key=_key) == sorted(want, key=_key) != []
+
+
+def test_gated_batch_reports_start_no_spark_job(spark):
+    sc = spark.sparkContext
+    for _, call in BATCH:
+        call(spark)  # fetch both views
+    sc.setJobGroup("snapshot-batch", "gated batch reports")
+    try:
+        for _, call in BATCH:
+            call(spark).collect()
+        assert sc.statusTracker().getJobIdsForGroup("snapshot-batch") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+_RESTART = """
+import sys
+from mimranalytics_core_spark import api, catalog
+from mimranalytics_core_spark.session import get_spark
+
+sf = sys.argv[1]
+first = get_spark("cache-restart-1")
+api.expand_neighborhood(first, sf, ["c:1"], 2)
+old = {k[0][0] for k in [*catalog._VIEW_CACHE, *catalog._SNAPSHOT_CACHE]}
+first.stop()
+second = get_spark("cache-restart-2")
+api.expand_neighborhood(second, sf, ["c:1"], 2)
+new = {k[0][0] for k in [*catalog._VIEW_CACHE, *catalog._SNAPSHOT_CACHE]}
+print(len(old), len(new), old & new == set(), new == {second.sparkContext.applicationId})
+second.stop()
+"""
+
+
+def test_stopped_session_entries_are_dropped(tmp_path):
+    """A process that stops its session and starts another keeps no view
+    plan or snapshot of the stopped one (its own JVM: the suite's session
+    stays up)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    env["SPARK_GRAFT_CPUS"] = "1"
+    out = subprocess.run(
+        [sys.executable, "-c", _RESTART, SF_SMALL], capture_output=True, text=True,
+        env=env, cwd=tmp_path, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split()[-2:] == ["True", "True"], out.stdout
