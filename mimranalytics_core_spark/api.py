@@ -56,8 +56,11 @@ def expand_neighborhood(
     (250,000) edges, counted from the parquet footers without a job, the
     answer comes from the driver-side snapshot's adjacency. That adjacency
     is built once per (session, sf_dir) by one ``toArrow()`` and dropped by
-    ``catalog.clear_view_cache()``. At the gate the whole snapshot holds
-    about 75 MiB. The answer is a job-free local frame ordered by
+    ``catalog.clear_view_cache()``. At the gate the adjacency and the
+    typed table and id lists it is built from hold about 75 MiB, and the
+    whole snapshot (with the seek index, UBO closure and edge arrays of
+    the other gated calls) about 200 MiB (README "Serving and the API").
+    The answer is a job-free local frame ordered by
     (hop, node). Above the gate, or when the count is unknown, the Spark BFS
     below runs. Both give the same rows and schema."""
     tables(spark, sf_dir)

@@ -10,8 +10,16 @@ Semantics notes:
   Π(edge weight) (reference README.md:13). On cyclic graphs the infinite sum
   is truncated by the depth bound — the same definition the recursive-CTE
   oracle uses (SURVEY.md §7.8.4), so engine and oracle agree by construction.
-- ``bfs_distances`` / ``weighted_sssp``: min-hop / min-cost from a seed set;
-  per-level frontier with min-agg dedup (no walk enumeration blowup).
+- The min-hop traversal family runs one frontier kernel, ``_bfs_levels``:
+  a level-synchronous BFS from all sources at once with a single
+  checkpoint and convergence policy. Its callers differ only in the
+  columns they carry: ``bfs_distances`` (one pseudo-source for the seed
+  set), ``multi_source_distances`` (none; ``closeness`` builds on it),
+  ``multi_source_shortest_paths`` (min path), ``multi_source_sigma``
+  (σ), ``multi_source_k_shortest_paths`` (σ and the k smallest paths)
+  and ``betweenness`` (σ; its backward phase reuses the levels). Each
+  level dedups on (source, node) (no walk enumeration blowup).
+- ``weighted_sssp``: min-cost from a source, Bellman-Ford relaxation.
 - ``connected_components``: min-label propagation to fixpoint.
 - ``pagerank``: fixed-iteration damped propagation, dangling mass
   redistributed uniformly, all inside the plan.
@@ -19,8 +27,10 @@ Semantics notes:
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mimranalytics_core_spark.plans.pregel import iterate_fixpoint
@@ -65,18 +75,6 @@ def ubo_closure(edges: DataFrame, max_depth: int = 6, threshold: float = 0.0) ->
         acc = acc.unionByName(frontier)
     out = acc.groupBy("owner", "entity").agg(F.sum("frac").alias("effective_ownership"))
     return out.filter(F.col("effective_ownership") >= threshold)
-
-
-# Per-iteration rank-vector checkpoints in the pagerank family are LAZY
-# (round-16): eager forced one driver-blocking job per iteration; a lazy
-# localCheckpoint materializes on first use inside the consuming job with
-# identical lineage truncation and reuse (the dangling-mass branch still
-# reads the persisted partitions, never recomputes the superstep).
-# Interleaved A/B, min-of-reps: graph_pagerank_weighted 2.98 -> 2.79 s at
-# sf0.1 and 8.86 -> 7.71 s on the 10x replica; graph_pagerank 7.55 -> 6.59
-# at sf1. The once-computed frames (nodes/shares/dangling/teleport) stay
-# eager — they are consumed by many jobs including driver-side count().
-_PR_CKPT_EAGER = False
 
 
 def path_rows(
@@ -209,27 +207,93 @@ def path_rows(
     return out.filter(F.col("hops") >= min_hops).select(*cols)
 
 
-def bfs_distances(edges: DataFrame, seeds: DataFrame, max_depth: int = 10) -> DataFrame:
-    """Min-hop distance from a seed set: (node, dist). ``seeds``: (node)."""
-    # materialize once: each level joins edges; a lazy derivation would be
-    # re-executed per level
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    dist = seeds.select("node").distinct().withColumn("dist", F.lit(0))
-    frontier = dist
-    for level in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(dist.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(level))
-            .localCheckpoint(eager=True)
+def _bfs_levels(
+    edges: DataFrame,
+    seeds: DataFrame,
+    source: Column,
+    max_depth: int,
+    carry: tuple = (),
+    state_partitions: int | None = None,
+) -> tuple[DataFrame, list[DataFrame]]:
+    """Level-synchronous BFS from many sources at once: the one frontier
+    loop behind the traversal family (Pregelix-style — each level is an
+    ordinary join/anti-join/group-by plan; callers differ only in the
+    columns they carry and how those combine).
+
+    Each distinct ``node`` of ``seeds`` starts at dist 0 under the source
+    value ``source`` (an expression over that node): ``F.col("node")`` gives
+    one BFS per seed, a literal one BFS from the whole set. Deduplicating
+    the seeds on ``node`` keeps the partitioning of an already-distinct
+    seed frame, which the first level's join then reuses. ``carry``: one
+    (name, init, extend, combine) per carried column — ``init`` is its
+    value at a seed, ``extend`` maps a frontier row joined to its out-edge
+    (``src``, ``dst``) to the value offered to ``dst``, ``combine``
+    aggregates the offers that reach a new (source, node) in one level.
+    With no carry, offers are combined by ``distinct()`` before the
+    anti-join.
+
+    Policy: the edges are checkpointed once (every level joins them); each
+    level, level 0 included, is checkpointed eagerly (it is read by the next
+    level's join, every later anti-join and the caller's union) and the loop
+    stops at the first empty level — per level one checkpoint job plus one
+    ``isEmpty``. ``state_partitions`` coalesces the edges and every level.
+    Returns the checkpointed edges and the non-empty levels, level ``i``
+    holding (source, node, dist = i, *carry) for the nodes first reached at
+    hop ``i``."""
+
+    def keep(df: DataFrame) -> DataFrame:
+        if state_partitions is not None:
+            df = df.coalesce(state_partitions)
+        return df.localCheckpoint(eager=True)
+
+    names = [c[0] for c in carry]
+    edges = keep(edges.select("src", "dst"))
+    frontier = keep(
+        seeds.select("node").distinct().select(
+            source.alias("source"),
+            "node",
+            F.lit(0).alias("dist"),
+            *(init.alias(n) for n, init, _, _ in carry),
         )
+    )
+    levels = [frontier]
+    seen = frontier.select("source", "node")
+    for level in range(1, max_depth + 1):
+        offers = frontier.join(edges, frontier.node == edges.src).select(
+            "source", F.col("dst").alias("node"), *(ext.alias(n) for n, _, ext, _ in carry)
+        )
+        if carry:
+            nxt = (
+                offers.join(seen, ["source", "node"], "left_anti")
+                .groupBy("source", "node")
+                .agg(*(comb.alias(n) for n, _, _, comb in carry))
+            )
+        else:
+            nxt = offers.distinct().join(seen, ["source", "node"], "left_anti")
+        nxt = keep(nxt.select("source", "node", F.lit(level).alias("dist"), *names))
         if nxt.isEmpty():
             break
-        dist = dist.unionByName(nxt)
+        levels.append(nxt)
+        seen = seen.unionByName(nxt.select("source", "node"))
         frontier = nxt
-    return dist
+    return edges, levels
+
+
+def _union(levels: list[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, levels)
+
+
+def _sigma(one: Column) -> tuple:
+    """σ carry, ``one`` at a seed: a node's shortest-path count is the sum
+    of its predecessors' counts."""
+    return ("sigma", one, F.col("sigma"), F.sum("sigma"))
+
+
+def bfs_distances(edges: DataFrame, seeds: DataFrame, max_depth: int = 10) -> DataFrame:
+    """Min-hop distance from a seed set: (node, dist). ``seeds``: (node).
+    One BFS from the whole set, under a single pseudo-source."""
+    _, levels = _bfs_levels(edges, seeds, F.lit(0), max_depth)
+    return _union(levels).select("node", "dist")
 
 
 def multi_source_distances(
@@ -239,28 +303,8 @@ def multi_source_distances(
     within ``max_depth``. Level-synchronous for ALL sources at once — one
     join + anti-join per level regardless of |sources|; the forward half of
     the Brandes machinery without σ bookkeeping."""
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    frontier = (
-        sources.select(F.col("node").alias("source"))
-        .withColumn("node", F.col("source"))
-        .withColumn("dist", F.lit(0))
-        .localCheckpoint(eager=True)
-    )
-    seen = frontier
-    for level in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select("source", F.col("dst").alias("node"))
-            .distinct()
-            .join(seen.select("source", "node"), ["source", "node"], "left_anti")
-            .withColumn("dist", F.lit(level))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        seen = seen.unionByName(nxt)
-        frontier = nxt
-    return seen
+    _, levels = _bfs_levels(edges, sources, F.col("node"), max_depth)
+    return _union(levels)
 
 
 def multi_source_shortest_paths(
@@ -278,34 +322,9 @@ def multi_source_shortest_paths(
     arbitrary one). Still never enumerates the path SET — one candidate
     per predecessor row per level, collapsed immediately; supersteps =
     ``max_depth`` at any |V| or |sources|."""
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    frontier = (
-        sources.select(F.col("node").alias("source"))
-        .withColumn("node", F.col("source"))
-        .withColumn("dist", F.lit(0))
-        .withColumn("path", F.array(F.col("source")))
-        .localCheckpoint(eager=True)
-    )
-    seen = frontier
-    for level in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select(
-                "source",
-                F.col("dst").alias("node"),
-                F.array_append("path", F.col("dst")).alias("path"),
-            )
-            .join(seen.select("source", "node"), ["source", "node"], "left_anti")
-            .groupBy("source", "node")
-            .agg(F.min("path").alias("path"))
-            .withColumn("dist", F.lit(level))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        seen = seen.unionByName(nxt)
-        frontier = nxt
-    return seen
+    path = ("path", F.array("node"), F.array_append("path", F.col("dst")), F.min("path"))
+    _, levels = _bfs_levels(edges, sources, F.col("node"), max_depth, (path,))
+    return _union(levels)
 
 
 def multi_source_k_shortest_paths(
@@ -333,43 +352,15 @@ def multi_source_k_shortest_paths(
     Scale: supersteps = ``max_depth`` at any |V| or |sources|; row width
     is O(k · depth) id strings — never the path-set explosion that makes
     unbounded allShortestPaths the 100 TB anti-pattern."""
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    frontier = (
-        sources.select(F.col("node").alias("source"))
-        .withColumn("node", F.col("source"))
-        .withColumn("dist", F.lit(0))
-        .withColumn("sigma", F.lit(1).cast("long"))
-        .withColumn("paths", F.array(F.col("source")))
-        .localCheckpoint(eager=True)
+    paths = (
+        "paths",
+        F.array("node"),
+        F.expr("transform(paths, p -> concat(p, '|', dst))"),
+        F.slice(F.array_sort(F.flatten(F.collect_list("paths"))), 1, k),
     )
-    seen = frontier
-    for level in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select(
-                "source",
-                F.col("dst").alias("node"),
-                "sigma",
-                F.expr(
-                    "transform(paths, p -> concat(p, '|', dst))"
-                ).alias("paths"),
-            )
-            .join(seen.select("source", "node"), ["source", "node"], "left_anti")
-            .groupBy("source", "node")
-            .agg(
-                F.sum("sigma").alias("sigma"),
-                F.slice(
-                    F.array_sort(F.flatten(F.collect_list("paths"))), 1, k
-                ).alias("paths"),
-            )
-            .withColumn("dist", F.lit(level))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        seen = seen.unionByName(nxt.select(*seen.columns))
-        frontier = nxt
-    return seen
+    carry = (_sigma(F.lit(1).cast("long")), paths)
+    _, levels = _bfs_levels(edges, sources, F.col("node"), max_depth, carry)
+    return _union(levels)
 
 
 def multi_source_sigma(
@@ -381,30 +372,9 @@ def multi_source_sigma(
     number of distinct min-hop paths s→v, computed WITHOUT enumerating
     paths (one join + σ-summing aggregate per level for all sources at
     once; supersteps = ``max_depth`` at any |V| or |sources|)."""
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    frontier = (
-        sources.select(F.col("node").alias("source"))
-        .withColumn("node", F.col("source"))
-        .withColumn("dist", F.lit(0))
-        .withColumn("sigma", F.lit(1).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    seen = frontier
-    for level in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select("source", F.col("dst").alias("node"), "sigma")
-            .join(seen.select("source", "node"), ["source", "node"], "left_anti")
-            .groupBy("source", "node")
-            .agg(F.sum("sigma").alias("sigma"))
-            .withColumn("dist", F.lit(level))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        seen = seen.unionByName(nxt.select("source", "node", "dist", "sigma"))
-        frontier = nxt
-    return seen
+    sigma = _sigma(F.lit(1).cast("long"))
+    _, levels = _bfs_levels(edges, sources, F.col("node"), max_depth, (sigma,))
+    return _union(levels)
 
 
 def closeness(edges: DataFrame, sources: DataFrame, max_depth: int = 8) -> DataFrame:
@@ -536,6 +506,16 @@ def connected_components(
     )
 
 
+# Per-superstep state checkpoints are LAZY (round-16), here and in
+# plans/pregel.iterate_fixpoint: eager forced one driver-blocking job per
+# superstep; a lazy localCheckpoint materializes on first use inside the
+# consuming job with identical lineage truncation and reuse (the pagerank
+# dangling-mass branch still reads the persisted partitions, never
+# recomputes the superstep). Interleaved A/B, min-of-reps:
+# graph_pagerank_weighted 2.98 -> 2.79 s at sf0.1 and 8.86 -> 7.71 s on the
+# 10x replica; graph_pagerank 7.55 -> 6.59 at sf1. Frames computed once
+# (nodes/shares/dangling/teleport) and the BFS levels stay eager — they are
+# consumed by many jobs, including a driver-side count() or emptiness check.
 def pagerank(
     edges: DataFrame,
     iters: int = 10,
@@ -617,12 +597,11 @@ def pagerank(
         # Checkpoint EVERY iteration: the next iteration's dangling-mass
         # aggregate re-reads ``ranks``; un-checkpointed, that branch would
         # recompute the whole previous superstep (join+agg) a second time —
-        # one cheap materialization beats one redundant shuffle. LAZY
-        # (round-16 A/B hook): eager forced one driver-blocking job per
-        # iteration; lazy materializes on first use with identical reuse.
+        # one cheap materialization beats one redundant shuffle. Lazy (see
+        # the comment above this function).
         if state_partitions is not None:
             ranks = ranks.coalesce(state_partitions)
-        ranks = ranks.localCheckpoint(eager=_PR_CKPT_EAGER)
+        ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
 
@@ -738,7 +717,7 @@ def pagerank_personalized(
         )
         if state_partitions is not None:
             ranks = ranks.coalesce(state_partitions)
-        ranks = ranks.localCheckpoint(eager=_PR_CKPT_EAGER)
+        ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
 
@@ -769,38 +748,12 @@ def betweenness(
     unchanged and bit-identical).
     """
     spark_f = F
-    # materialize once: both phases join edges per level; a lazy derivation
-    # would be re-executed 2·diameter times
-    edges = edges.select("src", "dst")
-    if state_partitions is not None:
-        edges = edges.coalesce(state_partitions)
-    edges = edges.localCheckpoint(eager=True)
-    frontier = (
-        sources.select(spark_f.col("node").alias("source"))
-        .withColumn("node", spark_f.col("source"))
-        .withColumn("dist", spark_f.lit(0))
-        .withColumn("sigma", spark_f.lit(1.0))
-        .localCheckpoint(eager=True)
+    # the forward phase's checkpointed edges and levels feed the backward
+    # phase, which joins them once per level
+    sigma = _sigma(spark_f.lit(1.0))
+    edges, levels = _bfs_levels(
+        edges, sources, spark_f.col("node"), max_depth, (sigma,), state_partitions
     )
-    visited = frontier
-    levels = [frontier]
-    for level in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select("source", spark_f.col("dst").alias("node"), "sigma")
-            .join(visited.select("source", "node"), ["source", "node"], "left_anti")
-            .groupBy("source", "node")
-            .agg(spark_f.sum("sigma").alias("sigma"))
-            .withColumn("dist", spark_f.lit(level))
-        )
-        if state_partitions is not None:
-            nxt = nxt.coalesce(state_partitions)
-        nxt = nxt.localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            break
-        levels.append(nxt)
-        visited = visited.unionByName(nxt.select("source", "node", "dist", "sigma"))
-        frontier = nxt
     # backward accumulation, deepest level first; columns renamed per role to
     # avoid self-join ambiguity (levels share lineage)
     delta = None  # (source, node, delta) for processed levels
@@ -882,7 +835,7 @@ def betweenness(
             )
         )
     if delta is None:
-        return sources.select("node").withColumn("betweenness", spark_f.lit(0.0))
+        return levels[0].select("node").withColumn("betweenness", spark_f.lit(0.0))
     return (
         delta.filter(spark_f.col("node") != spark_f.col("source"))
         .groupBy("node")

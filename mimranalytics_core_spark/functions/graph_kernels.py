@@ -42,14 +42,18 @@ def adjacency(src: list[str], dst: list[str]) -> dict[str, list[str]]:
     return adj
 
 
-def bfs(adj: dict[str, list[str]], seeds: list[str], hops: int) -> dict[str, int]:
-    """Min-hop distance ≤ ``hops`` from ``seeds``, in discovery order."""
+def bfs(neighbours, seeds: list, hops: int) -> dict:
+    """Min-hop distance ≤ ``hops`` from ``seeds``, in discovery order.
+    ``neighbours(node)`` gives the nodes one hop from ``node`` (None for
+    none); an adjacency dict stands for its ``get``."""
+    if isinstance(neighbours, dict):
+        neighbours = neighbours.get
     dist = dict.fromkeys(seeds, 0)
     frontier = list(dist)
     for level in range(1, hops + 1):
         nxt = []
         for node in frontier:
-            for m in adj.get(node, ()):
+            for m in neighbours(node) or ():
                 if m not in dist:
                     dist[m] = level
                     nxt.append(m)
@@ -93,21 +97,14 @@ class SeekGraph:
         ``min_hops <= dist <= max_hops``, from each seed that is a source of
         the directed view; None past ``budget`` rows."""
         rows = []
+
+        def neighbours(node):
+            return (m for m, _ in self.steps(node, types, direction))
+
         for s in dict.fromkeys(seeds):
             if next(self.steps(s, types, direction), None) is None:
                 continue
-            dist = {s: 0}
-            frontier = [s]
-            for level in range(1, max_hops + 1):
-                nxt = []
-                for node in frontier:
-                    for m, _ in self.steps(node, types, direction):
-                        if m not in dist:
-                            dist[m] = level
-                            nxt.append(m)
-                if not nxt:
-                    break
-                frontier = nxt
+            dist = bfs(neighbours, [s], max_hops)
             rows += [(s, n, d) for n, d in dist.items() if d >= min_hops]
             if len(rows) > budget:
                 return None

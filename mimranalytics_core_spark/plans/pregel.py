@@ -11,9 +11,8 @@ Catalyst does not optimize across iterations, so the harness handles the two
 things that kill naive loops at scale:
 
 - **Lineage truncation**: each iteration's plan references the previous one;
-  after k iterations the plan tree is O(2^k). ``localCheckpoint(eager)``
-  every ``checkpoint_every`` steps materializes the frontier and cuts the
-  plan back to a leaf.
+  after k iterations the plan tree is O(2^k). A ``localCheckpoint`` every
+  superstep materializes the state and cuts the plan back to a leaf.
 - **Convergence via bounded work**: the loop re-derives a delta/frontier each
   step and stops when it is empty (``isEmpty`` touches at most one partition
   early-out) or at ``max_iter``.
@@ -28,9 +27,6 @@ from pyspark.sql import functions as F
 
 
 CHANGED_COL = "__changed"
-
-
-_STEP_CKPT_EAGER = False
 
 
 def iterate_fixpoint(
@@ -78,10 +74,10 @@ def iterate_fixpoint(
         # Checkpoint every step: each step embeds a join against the previous
         # state and is evaluated at latest by the next convergence check —
         # materializing is strictly cheaper than recomputing a growing plan.
-        # LAZY since round-16: the checkpoint persists on first use (the
-        # convergence scan or the next superstep) with identical reuse,
-        # without one driver-blocking job per superstep.
-        new_state = new_state.localCheckpoint(eager=_STEP_CKPT_EAGER)
+        # Lazy (round-16; the A/B is in the comment above
+        # graph_algos.pagerank): the checkpoint persists on first use (the
+        # convergence scan or the next superstep) with identical reuse.
+        new_state = new_state.localCheckpoint(eager=False)
         if (i + 1) % check_every == 0 or i == max_iter - 1:
             if flagged:
                 if new_state.filter(F.col(CHANGED_COL)).isEmpty():

@@ -473,3 +473,154 @@ def test_greedy_coloring_matches_sequential(spark):
     # proper coloring invariant
     for s, d in raw:
         assert got[s] != got[d]
+
+
+# --- the BFS traversal family against one plain-Python BFS ----------------
+
+_BFS_RNG = random.Random(2027)
+BFS_EDGES = [("v0", "v1"), ("v1", "v2"), ("v2", "v0")]  # a 3-cycle
+for _ in range(34):
+    a, b = _BFS_RNG.sample(range(14), 2)
+    BFS_EDGES.append((f"v{a}", f"v{b}"))
+BFS_EDGES += BFS_EDGES[3:6]  # three parallel edges
+BFS_EDGES += [("v5", "v5"), ("v2", "z"), ("v9", "z")]  # a self-loop; z is in-only
+# x404 is absent from the graph; z reaches nothing
+BFS_SEEDS = ["v0", "v3", "v11", "z", "x404"]
+
+
+def _bfs_reference(edges, s, max_depth):
+    """Per-node dist, σ and the list of shortest paths (node lists) from
+    ``s``, counting each parallel edge as its own path; plus the per-level
+    node lists."""
+    adj: dict[str, list[str]] = {}
+    for a, b in edges:
+        adj.setdefault(a, []).append(b)
+    dist, sigma, paths, levels = {s: 0}, {s: 1}, {s: [[s]]}, [[s]]
+    for d in range(1, max_depth + 1):
+        new = []
+        for v in levels[-1]:
+            for w in adj.get(v, ()):
+                if w not in dist:
+                    dist[w], sigma[w], paths[w] = d, 0, []
+                    new.append(w)
+                if dist[w] == d:
+                    sigma[w] += sigma[v]
+                    paths[w] += [p + [w] for p in paths[v]]
+        if not new:
+            break
+        levels.append(new)
+    return dist, sigma, paths, levels
+
+
+def _brandes_reference(edges, sources, max_depth):
+    """Node and edge betweenness exactly as ``betweenness`` defines its
+    rows: per source, the backward dependency sum over DAG edges (each
+    parallel edge its own term); nodes other than the source that have a
+    DAG child; edges keyed by (least, greatest) endpoint."""
+    node: dict[str, float] = {}
+    edge: dict[tuple[str, str], float] = {}
+    reached = False
+    for s in sources:
+        dist, sigma, _, levels = _bfs_reference(edges, s, max_depth)
+        reached = reached or len(levels) > 1
+        delta: dict[str, float] = {}
+        for lev in range(len(levels) - 1, 0, -1):
+            for v, w in edges:
+                if dist.get(v) == lev - 1 and dist.get(w) == lev:
+                    c = sigma[v] / sigma[w] * (1.0 + delta.get(w, 0.0))
+                    delta[v] = delta.get(v, 0.0) + c
+                    key = (min(v, w), max(v, w))
+                    edge[key] = edge.get(key, 0.0) + c
+        for v, x in delta.items():
+            if v != s:
+                node[v] = node.get(v, 0.0) + x
+    if not reached:
+        return dict.fromkeys(sources, 0.0), {(min(a, b), max(a, b)): 0.0 for a, b in edges}
+    return node, edge
+
+
+def _half_up6(x):
+    import math
+
+    return math.floor(x * 1e6 + 0.5) / 1e6
+
+
+def _assert_close(got: dict, want: dict, what):
+    assert sorted(got) == sorted(want), what
+    for k, x in want.items():
+        assert abs(got[k] - _half_up6(x)) <= 1.0001e-6, (what, k, got[k], x)
+
+
+@pytest.mark.parametrize(
+    "seeds,max_depth",
+    [
+        (BFS_SEEDS, 0),
+        (BFS_SEEDS, 2),
+        (BFS_SEEDS, 99),
+        (["v0", "v0", "v3", "x404", "x404"], 99),
+    ],
+    ids=["depth0", "depth2", "past-diameter", "duplicate-seeds"],
+)
+def test_bfs_family_matches_reference(spark, seeds, max_depth):
+    from mimranalytics_core_spark.functions.graph_algos import (
+        betweenness,
+        closeness,
+        multi_source_distances,
+        multi_source_k_shortest_paths,
+        multi_source_shortest_paths,
+        multi_source_sigma,
+    )
+
+    k = 2
+    edges = spark.createDataFrame(BFS_EDGES, "src STRING, dst STRING")
+    src_df = spark.createDataFrame([(s,) for s in seeds], "node STRING")
+    sources = list(dict.fromkeys(seeds))
+    ref = {s: _bfs_reference(BFS_EDGES, s, max_depth) for s in sources}
+
+    want_rows = sorted(
+        (s, v, d, ref[s][1][v], min(ref[s][2][v]), sorted("|".join(p) for p in ref[s][2][v])[:k])
+        for s in sources
+        for v, d in ref[s][0].items()
+    )
+    sig = multi_source_sigma(edges, src_df, max_depth=max_depth)
+    assert sorted(tuple(r) for r in sig.collect()) == [w[:4] for w in want_rows]
+    sp = multi_source_shortest_paths(edges, src_df, max_depth=max_depth)
+    assert sorted((r.source, r.node, r.dist, r.path) for r in sp.collect()) == [
+        (s, v, d, p) for s, v, d, _, p, _ in want_rows
+    ]
+    ksp = multi_source_k_shortest_paths(edges, src_df, max_depth=max_depth, k=k)
+    assert sorted(tuple(r) for r in ksp.collect()) == [
+        (s, v, d, n, ps) for s, v, d, n, _, ps in want_rows
+    ]
+    dist = multi_source_distances(edges, src_df, max_depth=max_depth)
+    assert sorted(tuple(r) for r in dist.collect()) == [w[:3] for w in want_rows]
+
+    # one BFS from the whole seed set
+    whole: dict[str, int] = {}
+    for s in sources:
+        for v, d in ref[s][0].items():
+            whole[v] = min(d, whole.get(v, d))
+    bfs = bfs_distances(edges, src_df, max_depth=max_depth).collect()
+    assert sorted(tuple(r) for r in bfs) == sorted(whole.items())
+
+    want_close = {}
+    for s in sources:
+        far = [d for v, d in ref[s][0].items() if v != s]
+        if far:
+            want_close[s] = len(far) / sum(far)
+    got_close = closeness(edges, src_df, max_depth=max_depth).collect()
+    assert len(got_close) == len(want_close)
+    _assert_close({r.node: r.closeness for r in got_close}, want_close, "closeness")
+
+    und = [(a, b) for e in BFS_EDGES for a, b in (e, e[::-1])]
+    want_node, want_edge = _brandes_reference(und, sources, max_depth)
+    got_node = betweenness(undirect(edges), src_df, max_depth=max_depth).collect()
+    assert len(got_node) == len(want_node)
+    _assert_close({r.node: r.betweenness for r in got_node}, want_node, "node betweenness")
+    got_edge = betweenness(
+        undirect(edges), src_df, max_depth=max_depth, state_partitions=2, edge_scores=True
+    ).collect()
+    assert len(got_edge) == len(want_edge)
+    _assert_close(
+        {(r.src, r.dst): r.edge_betweenness for r in got_edge}, want_edge, "edge betweenness"
+    )

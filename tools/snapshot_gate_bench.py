@@ -8,6 +8,8 @@ normalised per nation), then for each kernel of
 ``functions/graph_kernels.py`` prints its wall time and ``tracemalloc``
 peak, and with ``--spark 1`` the wall time of the Spark function it
 stands in for on the same edges (each forced to completion by a count).
+The last row is a bound-id seek: ``SeekGraph.distances`` against Spark
+``multi_source_distances`` from 16 customers at 3 hops.
 Set ``SPARK_GRAFT_CPUS`` to pin the Spark side's local[N].
 """
 
@@ -29,6 +31,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from mimranalytics_core_spark.functions import graph_kernels as gk  # noqa: E402
 
 VIZ_SEEDS = ["n:3", "n:17"]  # api.export_graph_viz at 2 hops, as the nightly pass calls it
+# a bound-id seek at the seed cap (graph_snapshot.MAX_SEEDS), 3 hops on the undirected view
+SEEK_SEEDS = [f"c:{i}" for i in range(0, 16_000, 1_000)]
 
 
 def synthetic(n_edges: int, seed: int = 0) -> pa.Table:
@@ -68,6 +72,8 @@ def kernels(tbl: pa.Table) -> dict:
     ids = nodes.to_pylist()
     tier = np.array([i for i, v in enumerate(ids) if v.startswith(("n:", "r:"))])
     adj = gk.adjacency(tbl["src"].to_pylist(), tbl["dst"].to_pylist())  # memoized per view
+    cols = ("src", "dst", "rel_type", "weight")
+    seek = gk.SeekGraph(*(tbl[c].to_pylist() for c in cols))  # memoized per view
 
     def viz():
         inside = np.zeros(n, bool)
@@ -86,6 +92,9 @@ def kernels(tbl: pa.Table) -> dict:
         "risk (graph_risk_score)": lambda: graph_ops.risk_kernel(nodes, src, dst),
         "walk_sum (ubo, depth 6)": lambda: gk.walk_sum(n, src, dst, weight, owners, 6),
         "viz (bfs + induced edges)": viz,
+        "seek distances (16 seeds, 3 hops)": lambda: seek.distances(
+            SEEK_SEEDS, None, "both", 0, 3, budget=10**9
+        ),
     }
 
 
@@ -134,6 +143,9 @@ def spark_paths(spark, tbl: pa.Table) -> dict:
         "risk (graph_risk_score)": lambda: graph_ops.risk_spark(edges),
         "walk_sum (ubo, depth 6)": ubo,
         "viz (bfs + induced edges)": viz,
+        "seek distances (16 seeds, 3 hops)": lambda: ga.multi_source_distances(
+            und, spark.createDataFrame([(v,) for v in SEEK_SEEDS], "node STRING"), max_depth=3
+        ),
     }
 
 
