@@ -19,22 +19,36 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+REPO = Path(__file__).resolve().parent
+sys.path.insert(0, str(REPO))
+
+from tools.audit_gate import DECADE_RECORDS  # noqa: E402
 
 
 def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").strip()
+    out_env = os.environ.get("SPARK_GRAFT_BENCH_OUT", "").strip()
     # A SPARK_GRAFT_BENCH_ONLY-filtered run writes a few-query record;
-    # letting it land on the default sidecar path would clobber the full
-    # sf0.1 record (the exact artifact-clobber class the driver-contract
-    # test gates on). Fail before Spark even starts.
-    if os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").strip() and not os.environ.get(
-        "SPARK_GRAFT_BENCH_OUT", ""
-    ).strip():
+    # letting it land on the default sidecar path would clobber a full
+    # record (the artifact-clobber class the driver-contract test gates
+    # on). Fail before Spark even starts.
+    if only and not out_env:
         raise SystemExit(
             "SPARK_GRAFT_BENCH_ONLY requires SPARK_GRAFT_BENCH_OUT "
             "(a partial run must not overwrite BENCH_LOCAL.json)"
         )
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    # The committed decade records (tools/audit_gate.py reads them) take
+    # only a full run at their own scale factor.
+    out_target = (REPO / out_env).resolve() if out_env else None
+    for record, record_sf in DECADE_RECORDS.items():
+        if out_target == (REPO / record).resolve() and (only or sf_val != record_sf):
+            raise SystemExit(
+                f"{record} is the committed sf{record_sf} decade record: "
+                f"a partial run or a run at sf{sf_val} must not overwrite it"
+            )
     from mimranalytics_core_spark.registry import all_ops
     from mimranalytics_core_spark.session import get_spark
 
@@ -84,7 +98,6 @@ def main() -> None:
     # SPARK_GRAFT_BENCH_ONLY: comma-separated op names — run just those.
     # Used by decade-pair backfills (audit_gate) so adding one op doesn't
     # force a full 306-query sf1 re-run.
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").strip()
     if only:
         keep = {n.strip() for n in only.split(",") if n.strip()}
         unknown = keep - set(ops)
@@ -119,8 +132,6 @@ def main() -> None:
                 timings[name] = min(timings[name], second)
 
     total = round(sum(v for v in timings.values() if v >= 0), 3)
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
     # canary re-time: three cheap, shape-diverse, code-stable queries,
     # min-of-3 AFTER the suite — compare across rounds to read host speed
@@ -154,14 +165,14 @@ def main() -> None:
     # (round 1's full line was front-truncated by a ~2 KB tail capture and
     # arrived unparseable).
     print(json.dumps(full), file=sys.stderr)
-    # SPARK_GRAFT_BENCH_OUT overrides the sidecar path so scaling-pair
-    # runs (10x replica) don't clobber the recorded sf0.1 pair file.
-    # Round-15 guard: BENCH_LOCAL.json is BY CONTRACT the sf0.1 decade
-    # record (tools/audit_gate.py asserts it) — an ad-hoc run at any
-    # other SF without an explicit BENCH_OUT routes its sidecar to /tmp
-    # instead of silently clobbering the record.
-    out_name = os.environ.get("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
-    out_path = Path(__file__).resolve().parent / out_name
+    # SPARK_GRAFT_BENCH_OUT overrides the sidecar path; the decade pair
+    # is written this way into the committed BENCH_SF01_LOCAL.json /
+    # BENCH_SF1_LOCAL.json (guarded above). The default, BENCH_LOCAL.json,
+    # is the gitignored sidecar of the benchmark's own sf0.1 run: an
+    # ad-hoc run at any other SF without an explicit BENCH_OUT routes its
+    # sidecar to /tmp instead, so the sidecar always reads sf0.1.
+    out_name = out_env or "BENCH_LOCAL.json"
+    out_path = REPO / out_name
     if out_name == "BENCH_LOCAL.json" and sf_val != 0.1:
         out_path = Path(f"/tmp/BENCH_LOCAL_sf{sf_val}.json")
         out_name = str(out_path)

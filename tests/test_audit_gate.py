@@ -3,9 +3,9 @@
 Round-8 verdict #2: the scale audit was prose-only, so newly registered ops
 could ship with no measured 10x decade pair (the hole the round-6 39.9x
 scale-killer entered through). This test makes the record mechanical: it is
-RED whenever registry.all_ops() has an op absent from either BENCH_LOCAL.json
-(sf0.1) or BENCH_SF1_LOCAL.json (10x replica), or whose decade ratio
-exceeds 10x.
+RED whenever registry.all_ops() has an op absent from either
+BENCH_SF01_LOCAL.json (sf0.1) or BENCH_SF1_LOCAL.json (10x replica), or whose
+decade ratio exceeds 10x.
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ def test_gate_green_on_committed_records():
 
 
 def test_gate_red_when_op_lacks_pair():
-    sf01 = json.loads((REPO / "BENCH_LOCAL.json").read_text())
+    sf01 = json.loads((REPO / audit_gate.SF01_RECORD).read_text())
     sf1 = copy.deepcopy(json.loads((REPO / "BENCH_SF1_LOCAL.json").read_text()))
     victim = sorted(sf1["queries"])[0]
     del sf1["queries"][victim]
@@ -38,7 +38,7 @@ def test_gate_red_when_op_lacks_pair():
 
 
 def test_gate_red_when_ratio_superlinear():
-    sf01 = json.loads((REPO / "BENCH_LOCAL.json").read_text())
+    sf01 = json.loads((REPO / audit_gate.SF01_RECORD).read_text())
     sf1 = copy.deepcopy(json.loads((REPO / "BENCH_SF1_LOCAL.json").read_text()))
     victim = max(sf01["queries"], key=sf01["queries"].get)
     sf1["queries"][victim] = sf01["queries"][victim] * 50
@@ -61,7 +61,7 @@ def test_gate_cli_green():
 def test_exemption_annotates_but_still_caps():
     # round-11: a DOCUMENTED exemption raises the cap for exactly that op
     # — and the cap is still enforced (an exemption never uncaps)
-    sf01 = json.loads((REPO / "BENCH_LOCAL.json").read_text())
+    sf01 = json.loads((REPO / audit_gate.SF01_RECORD).read_text())
     sf1 = copy.deepcopy(json.loads((REPO / "BENCH_SF1_LOCAL.json").read_text()))
     victim = sorted(sf1["queries"])[0]
     sf1["queries"][victim] = max(sf01["queries"][victim], 0.05) * 11
@@ -74,7 +74,7 @@ def test_exemption_annotates_but_still_caps():
 
 
 def test_exemption_without_reason_is_ignored(tmp_path):
-    sf01 = json.loads((REPO / "BENCH_LOCAL.json").read_text())
+    sf01 = json.loads((REPO / audit_gate.SF01_RECORD).read_text())
     sf1 = copy.deepcopy(json.loads((REPO / "BENCH_SF1_LOCAL.json").read_text()))
     victim = sorted(sf1["queries"])[0]
     sf1["queries"][victim] = max(sf01["queries"][victim], 0.05) * 11

@@ -9,6 +9,7 @@ import sys
 from pathlib import Path
 
 import __spark_entry__ as entrymod
+from tools.audit_gate import DECADE_RECORDS, SF01_RECORD
 
 
 def test_entry_smoke(spark):
@@ -55,6 +56,7 @@ def test_bench_emits_single_json_line(tmp_path):
     # judging sessions — VERDICT.md r8 "what's wrong" #2).
     repo = Path(__file__).resolve().parent.parent
     sidecar_before = (repo / "BENCH_LOCAL.json").read_bytes() if (repo / "BENCH_LOCAL.json").exists() else None
+    record_before = (repo / SF01_RECORD).read_bytes()
     detail_path = tmp_path / "bench_detail.json"
     proc = subprocess.run(
         [sys.executable, "bench.py"],
@@ -86,6 +88,36 @@ def test_bench_emits_single_json_line(tmp_path):
     # byte-identical after the run.
     sidecar_after = (repo / "BENCH_LOCAL.json").read_bytes() if (repo / "BENCH_LOCAL.json").exists() else None
     assert sidecar_after == sidecar_before, "bench.py run from tests clobbered BENCH_LOCAL.json"
+    # ...and so is the committed sf0.1 decade record that tools/audit_gate.py reads.
+    record_after = (repo / SF01_RECORD).read_bytes()
+    assert record_after == record_before, f"bench.py run from tests clobbered {SF01_RECORD}"
+
+
+def test_bench_refuses_partial_or_wrong_sf_onto_decade_records():
+    # The committed decade records take only a full run at their own scale
+    # factor; the guard fires before Spark starts.
+    import os
+
+    repo = Path(__file__).resolve().parent.parent
+    for record, record_sf in DECADE_RECORDS.items():
+        # bench.py reads the scale factor off the directory name
+        wrong_sf = "testdata/sf0.001"
+        right_sf = "testdata/sf0.1" if record_sf == 0.1 else "testdata/replica_sf1"
+        before = (repo / record).read_bytes()
+        for extra in (
+            {"SPARK_GRAFT_SF_DIR": wrong_sf},
+            {"SPARK_GRAFT_SF_DIR": right_sf, "SPARK_GRAFT_BENCH_ONLY": "agg_global"},
+        ):
+            proc = subprocess.run(
+                [sys.executable, str(repo / "bench.py")],
+                env={**os.environ, **extra, "SPARK_GRAFT_BENCH_OUT": record},
+                capture_output=True,
+                text=True,
+                timeout=60,
+            )
+            assert proc.returncode != 0, (record, extra)
+            assert f"{record} is the committed" in proc.stderr, proc.stderr[-500:]
+        assert (repo / record).read_bytes() == before
 
 
 def test_survey_registry_count_pinned():

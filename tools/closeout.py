@@ -9,9 +9,10 @@ one valid order, each against the tree AS IT WILL SHIP, and refuses to
 write the close-out record if any step is red.
 
 Order (fixed):
-  1. bench sf0.1  -> BENCH_LOCAL.json          (the shipped sidecar)
-  2. bench sf1    -> BENCH_SF1_LOCAL.json      (the shipped decade twin)
-  3. audit_gate on the records written in 1+2  (must exit 0)
+  1. bench sf0.1  -> BENCH_SF01_LOCAL.json     (the committed sf0.1 record)
+  2. bench sf1    -> BENCH_SF1_LOCAL.json      (the committed decade twin)
+  3. audit_gate on the records written in 1+2  (must exit 0; a hot op is
+     re-timed min-of-3 solo on both legs and merged into both records)
   4. full `pytest tests/` on the same tree     (must exit 0, after 1+2
      so the gate tests see the shipped records)
   5. full-registry selfcheck (tools/driver_sim.py, all oracle'd ops at
@@ -39,6 +40,9 @@ import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
+
+from tools.audit_gate import SF01_RECORD, SF1_RECORD, load_exemptions  # noqa: E402
 
 
 def run(desc: str, cmd: list[str], env: dict | None = None) -> subprocess.CompletedProcess:
@@ -64,16 +68,18 @@ def main() -> int:
     ap.add_argument("--selfcheck-out", default=None)
     ap.add_argument("--skip-sf1", action="store_true",
                     help="skip the sf1 refresh (replica absent); gate still "
-                    "runs on the committed BENCH_SF1_LOCAL.json")
+                    f"runs on the committed {SF1_RECORD}")
     args = ap.parse_args()
 
     record: dict = {"round": args.round, "order": []}
 
-    # 1. bench sf0.1 — writes BENCH_LOCAL.json (the shipped sidecar).
-    run("bench sf0.1 -> BENCH_LOCAL.json",
+    # 1. bench sf0.1 — writes the committed sf0.1 record, not bench.py's
+    #    gitignored BENCH_LOCAL.json sidecar, so the gate reads this run.
+    run(f"bench sf0.1 -> {SF01_RECORD}",
         [sys.executable, "bench.py"],
-        env={"SPARK_GRAFT_SF_DIR": "/root/testdata/sf0.1"})
-    b01 = json.loads((REPO / "BENCH_LOCAL.json").read_text())
+        env={"SPARK_GRAFT_SF_DIR": "/root/testdata/sf0.1",
+             "SPARK_GRAFT_BENCH_OUT": SF01_RECORD})
+    b01 = json.loads((REPO / SF01_RECORD).read_text())
     record["bench_sf01"] = {"wall": b01["value"], "n_queries": len(b01["queries"]),
                             "n_failed": sum(1 for v in b01["queries"].values() if v < 0)}
     record["order"].append("bench_sf01")
@@ -81,17 +87,17 @@ def main() -> int:
         print("CLOSEOUT RED: bench sf0.1 has failed queries.")
         return 1
 
-    # 2. bench sf1 — writes BENCH_SF1_LOCAL.json (the shipped decade twin).
+    # 2. bench sf1 — writes the committed decade twin.
     if not args.skip_sf1:
         if not Path(args.sf1_dir, "customer.parquet").exists():
             run("build sf1 replica",
                 [sys.executable, "tools/make_scaled_sf.py"])
-        run("bench sf1 -> BENCH_SF1_LOCAL.json",
+        run(f"bench sf1 -> {SF1_RECORD}",
             [sys.executable, "bench.py"],
             env={"SPARK_GRAFT_SF_DIR": args.sf1_dir,
-                 "SPARK_GRAFT_BENCH_OUT": "BENCH_SF1_LOCAL.json"})
+                 "SPARK_GRAFT_BENCH_OUT": SF1_RECORD})
         record["order"].append("bench_sf1")
-    b1 = json.loads((REPO / "BENCH_SF1_LOCAL.json").read_text())
+    b1 = json.loads((REPO / SF1_RECORD).read_text())
     record["bench_sf1"] = {"wall": b1["value"], "n_queries": len(b1["queries"]),
                            "n_failed": sum(1 for v in b1["queries"].values() if v < 0)}
 
@@ -121,8 +127,8 @@ def main() -> int:
             return 1
         for op in hot:
             pair = {}
-            for sf_dir, rec in (("/root/testdata/sf0.1", "BENCH_LOCAL.json"),
-                                (args.sf1_dir, "BENCH_SF1_LOCAL.json")):
+            for sf_dir, rec in (("/root/testdata/sf0.1", SF01_RECORD),
+                                (args.sf1_dir, SF1_RECORD)):
                 vals = []
                 for rep in range(3):
                     out = f"/tmp/closeout_backfill_{op}_{rep}.json"
@@ -141,16 +147,17 @@ def main() -> int:
         record["gate_backfill"] = backfilled
     gate = run("audit_gate on shipped records",
                [sys.executable, "tools/audit_gate.py"])
+    # the worst ratio is read from the records as they ship, after any
+    # backfill merge, so it agrees with the gate's verdict
+    q01 = json.loads((REPO / SF01_RECORD).read_text())["queries"]
+    q1 = json.loads((REPO / SF1_RECORD).read_text())["queries"]
     worst, worst_op = 0.0, None
-    for name, v01 in b01["queries"].items():
-        v1 = b1["queries"].get(name)
+    for name, v01 in q01.items():
+        v1 = q1.get(name)
         if v1 is not None and v1 >= 0 and v01 >= 0:
             r = v1 / max(v01, 0.05)
             if r > worst:
                 worst, worst_op = r, name
-    sys.path.insert(0, str(REPO))
-    from tools.audit_gate import load_exemptions
-
     ex = load_exemptions()
     record["decade_gate"] = {
         "green": True,
