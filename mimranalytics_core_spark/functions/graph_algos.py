@@ -19,10 +19,17 @@ Semantics notes:
   (σ), ``multi_source_k_shortest_paths`` (σ and the k smallest paths)
   and ``betweenness`` (σ; its backward phase reuses the levels). Each
   level dedups on (source, node) (no walk enumeration blowup).
-- ``weighted_sssp``: min-cost from a source, Bellman-Ford relaxation.
-- ``connected_components``: min-label propagation to fixpoint.
-- ``pagerank``: fixed-iteration damped propagation, dangling mass
-  redistributed uniformly, all inside the plan.
+- The power-iteration family runs one superstep, ``_spmv`` (A·x as one
+  join and one group-by), under one checkpoint policy (the note above
+  ``pagerank``): ``pagerank`` (uniform or seeded teleport, optionally
+  weight-proportional shares; one step per iteration plus the dangling
+  mass), ``hits`` (two half-steps, each L1-normalized), ``eigenvector``
+  (one step on the symmetrized graph, L2-normalized) and ``katz`` (one
+  step, x ← 1 + alpha·A'x).
+- The fixpoint family runs the Pregel harness,
+  ``plans/pregel.iterate_fixpoint`` (folded-flag convergence):
+  ``weighted_sssp`` (min-cost from a source, Bellman-Ford relaxation) and
+  ``connected_components`` (min-label propagation).
 """
 
 from __future__ import annotations
@@ -33,7 +40,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mimranalytics_core_spark.plans.pregel import iterate_fixpoint
+from mimranalytics_core_spark.plans.pregel import CHANGED_COL, iterate_fixpoint
 
 
 def undirect(edges: DataFrame) -> DataFrame:
@@ -207,6 +214,16 @@ def path_rows(
     return out.filter(F.col("hops") >= min_hops).select(*cols)
 
 
+def _keep(df: DataFrame, state_partitions: int | None = None, eager: bool = True) -> DataFrame:
+    """Checkpoint ``df`` after coalescing it to ``state_partitions``: eager
+    for set-up frames that many jobs read, lazy for per-superstep state,
+    which the next superstep's job materializes (see the policy note above
+    :func:`pagerank`)."""
+    if state_partitions is not None:
+        df = df.coalesce(state_partitions)
+    return df.localCheckpoint(eager=eager)
+
+
 def _bfs_levels(
     edges: DataFrame,
     seeds: DataFrame,
@@ -241,20 +258,16 @@ def _bfs_levels(
     holding (source, node, dist = i, *carry) for the nodes first reached at
     hop ``i``."""
 
-    def keep(df: DataFrame) -> DataFrame:
-        if state_partitions is not None:
-            df = df.coalesce(state_partitions)
-        return df.localCheckpoint(eager=True)
-
     names = [c[0] for c in carry]
-    edges = keep(edges.select("src", "dst"))
-    frontier = keep(
+    edges = _keep(edges.select("src", "dst"), state_partitions)
+    frontier = _keep(
         seeds.select("node").distinct().select(
             source.alias("source"),
             "node",
             F.lit(0).alias("dist"),
             *(init.alias(n) for n, init, _, _ in carry),
-        )
+        ),
+        state_partitions,
     )
     levels = [frontier]
     seen = frontier.select("source", "node")
@@ -270,7 +283,9 @@ def _bfs_levels(
             )
         else:
             nxt = offers.distinct().join(seen, ["source", "node"], "left_anti")
-        nxt = keep(nxt.select("source", "node", F.lit(level).alias("dist"), *names))
+        nxt = _keep(
+            nxt.select("source", "node", F.lit(level).alias("dist"), *names), state_partitions
+        )
         if nxt.isEmpty():
             break
         levels.append(nxt)
@@ -404,13 +419,10 @@ def weighted_sssp(edges: DataFrame, source: str, max_iter: int = 20) -> DataFram
     edges = edges.select("src", "dst", "weight").localCheckpoint(eager=True)
     state = edges.sparkSession.createDataFrame([(source, 0.0)], "node STRING, cost DOUBLE")
 
-    from mimranalytics_core_spark.plans.pregel import CHANGED_COL
-
     def step(costs):
-        # folded flag (round-15): the node's own carry-over row is tagged,
-        # so the relaxation aggregate also yields the old cost — changed =
-        # improved OR newly reached (no self row → __old null), replacing
-        # the per-check old-vs-new left join of the legacy protocol
+        # folded flag: the node's own carry-over row is tagged, so the
+        # relaxation aggregate also yields the old cost — changed =
+        # improved OR newly reached (no self row → __old null)
         relaxed = (
             costs.join(edges, costs.node == edges.src)
             .select(F.col("dst").alias("node"), (F.col("cost") + F.col("weight")).alias("cost"))
@@ -430,7 +442,7 @@ def weighted_sssp(edges: DataFrame, source: str, max_iter: int = 20) -> DataFram
             F.coalesce(F.col("cost") < F.col("__old"), F.lit(True)).alias(CHANGED_COL),
         )
 
-    return iterate_fixpoint(state, step, None, max_iter=max_iter)
+    return iterate_fixpoint(state, step, max_iter=max_iter)
 
 
 def connected_components(
@@ -447,8 +459,7 @@ def connected_components(
     reachability) or when the caller knows the diameter bound.
 
     With ``check_convergence=True`` the fixpoint test uses pregel.py's
-    FOLDED-FLAG protocol (round-15 — previously the legacy old-vs-new join):
-    the union feeding the min-aggregate tags each node's own carry-over row,
+    folded-flag protocol: the union feeding the min-aggregate tags each node's own carry-over row,
     so the aggregate emits both the new label and the old one, and
     ``__changed`` = new < old costs nothing beyond the agg the superstep
     already runs. Convergence is then a filter scan on the materialized
@@ -458,15 +469,10 @@ def connected_components(
     # Materialize the symmetrized edge list once: every superstep joins
     # against it, and the upstream edge derivation (windowed weight shares,
     # unions) would otherwise be recomputed per iteration.
-    und = undirect(edges)
-    if state_partitions is not None:
-        und = und.coalesce(state_partitions)
-    und = und.localCheckpoint(eager=True)
+    und = _keep(undirect(edges), state_partitions)
     state = und.select(F.col("src").alias("node")).distinct().withColumn(
         "component", F.col("node")
     )
-
-    from mimranalytics_core_spark.plans.pregel import CHANGED_COL
 
     def step(labels):
         prop = und.join(labels, und.src == labels.node).select(
@@ -497,34 +503,65 @@ def connected_components(
             (F.col("component") < F.col("__old")).alias(CHANGED_COL),
         )
 
-    return iterate_fixpoint(
-        state,
-        step,
-        None,
-        max_iter=max_iter,
-        state_partitions=state_partitions,
-    )
+    return iterate_fixpoint(state, step, max_iter=max_iter, state_partitions=state_partitions)
 
 
-# Per-superstep state checkpoints are LAZY (round-16), here and in
-# plans/pregel.iterate_fixpoint: eager forced one driver-blocking job per
+# Checkpoint policy of the power family (pagerank, hits, eigenvector, katz)
+# and of plans/pregel.iterate_fixpoint: frames computed once (edges, shares,
+# nodes, dangling set) are checkpointed EAGERLY — many jobs read them,
+# including a driver-side count() or emptiness check. The start vector is a
+# projection of the node frame, not checkpointed. Per-superstep state is
+# checkpointed LAZILY (round-16): eager forced one driver-blocking job per
 # superstep; a lazy localCheckpoint materializes on first use inside the
 # consuming job with identical lineage truncation and reuse (the pagerank
 # dangling-mass branch still reads the persisted partitions, never
 # recomputes the superstep). Interleaved A/B, min-of-reps:
 # graph_pagerank_weighted 2.98 -> 2.79 s at sf0.1 and 8.86 -> 7.71 s on the
-# 10x replica; graph_pagerank 7.55 -> 6.59 at sf1. Frames computed once
-# (nodes/shares/dangling/teleport) and the BFS levels stay eager — they are
-# consumed by many jobs, including a driver-side count() or emptiness check.
+# 10x replica; graph_pagerank 7.55 -> 6.59 at sf1.
+def _spmv(
+    edges: DataFrame, x: DataFrame, src: str, dst: str, share: str | None = None
+) -> DataFrame:
+    """One power-iteration superstep, A·x as a join and a group-by:
+    (node, inflow), inflow = Σ x.v · ``share`` over the ``edges`` whose
+    ``dst`` column is the node, each joined to ``x`` (node, v) on its
+    ``src`` column. A node no edge reaches has no row."""
+    v = F.col("v") if share is None else F.col("v") * F.col(share)
+    return (
+        edges.join(x, F.col(src) == x.node)
+        .groupBy(F.col(dst).alias("node"))
+        .agg(F.sum(v).alias("inflow"))
+    )
+
+
+def _nodes(edges: DataFrame) -> DataFrame:
+    """The distinct endpoints of ``edges``: (node)."""
+    return (
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+
+
 def pagerank(
     edges: DataFrame,
     iters: int = 10,
     damping: float = 0.85,
     state_partitions: int | None = None,
     weight_col: str | None = None,
+    seeds: DataFrame | None = None,
 ) -> DataFrame:
     """Damped PageRank, fixed iterations: (node, rank). Dangling mass is
-    redistributed uniformly inside the plan (no driver round-trips).
+    redistributed with the teleport, inside the plan (no driver
+    round-trips).
+
+    ``seeds`` (node): personalized PageRank — "influence of THIS entity
+    set" (reference README.md:13 'highlight'). The teleport is restricted
+    to the seeds: tele(v) = 1/|S| on a seed, else 0; rank₀ = tele;
+    rankₖ₊₁(v) = (1-d)·tele(v) + d·(inflowₖ(v) + dmₖ·tele(v)), so the
+    dangling mass returns to the seed set. No seed: every node ranks 0.
+    None: the uniform teleport, rank₀ = 1/n and
+    rankₖ₊₁(v) = (1-d)/n + d·(inflowₖ(v) + dmₖ/n). Each variant keeps its
+    own float expression, which the oracles hash at 6 dp.
 
     ``weight_col``: edge-weighted variant — each source splits its rank
     proportionally to the (positive) edge weights instead of uniformly
@@ -533,25 +570,39 @@ def pagerank(
     zero weight therefore becomes dangling, which is exactly the
     "no outgoing mass" semantics.
 
-    Per-iteration cost: one contribution join (pre-joined edge shares ×
-    ranks) + aggregate, plus one left_semi join of the checkpointed rank
+    Per-iteration cost: one :func:`_spmv` superstep (pre-joined edge
+    shares × ranks), plus one left_semi join of the checkpointed rank
     vector against the once-computed dangling node set to get that
-    iteration's dangling mass (a scan+agg, not a per-iteration anti-join —
-    the dangling SET is computed once outside the loop). The scalar mass is
-    then broadcast into the rank update.
+    iteration's dangling mass (a scan+agg, not a per-iteration anti-join).
+    The scalar mass is then broadcast into the rank update.
     """
     e = edges.select("src", "dst") if weight_col is None else edges.select(
         "src", "dst", F.col(weight_col).alias("w")
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    if n == 0:  # empty graph: no nodes to rank (avoid 1/0 below)
-        return nodes.withColumn("rank", F.lit(0.0))
+    nodes = _nodes(e)
+    d = float(damping)
+    if seeds is None:
+        nodes = _keep(nodes)
+        n = nodes.count()
+        if n == 0:  # empty graph: no nodes to rank (avoid 1/0 below)
+            return nodes.withColumn("rank", F.lit(0.0))
+        ranks = nodes.withColumn("rank", F.lit(1.0 / n))
+        teleport, back = F.lit((1 - d) / n), F.col("dm") / F.lit(float(n))
+    else:
+        s = seeds.select("node").distinct()
+        ns = s.count()
+        if ns == 0:
+            return nodes.withColumn("rank", F.lit(0.0))
+        nodes = _keep(
+            nodes.join(s.withColumn("__seed", F.lit(1)), "node", "left").select(
+                "node",
+                F.when(F.col("__seed").isNotNull(), F.lit(1.0) / F.lit(float(ns)))
+                .otherwise(F.lit(0.0))
+                .alias("tele"),
+            )
+        )
+        ranks = nodes.select("node", F.col("tele").alias("rank"))
+        teleport, back = F.lit(1 - d) * F.col("tele"), F.col("dm") * F.col("tele")
     if weight_col is None:
         out_deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
         shares = e.join(out_deg, "src").select(
@@ -563,45 +614,23 @@ def pagerank(
         shares = pos.join(out_deg, "src").select(
             "src", "dst", (F.col("w") / F.col("wsum")).alias("share")
         )
-    if state_partitions is not None:
-        shares = shares.coalesce(state_partitions)
-    shares = shares.localCheckpoint(eager=True)
-    # Dangling node set computed ONCE (not an anti-join per iteration); its
-    # per-iteration mass is a scan+agg over the checkpointed rank vector.
-    dangling = nodes.join(out_deg, nodes.node == out_deg.src, "left_anti").coalesce(
-        1
-    ).localCheckpoint(eager=True)
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for i in range(iters):
-        contribs = (
-            shares.join(ranks, shares.src == ranks.node)
-            .select(F.col("dst").alias("node"), (F.col("rank") * F.col("share")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
+    shares = _keep(shares, state_partitions)
+    dangling = nodes.join(out_deg, nodes.node == out_deg.src, "left_anti").select("node")
+    dangling = _keep(dangling, 1)
+    for _ in range(iters):
+        x = ranks.select("node", F.col("rank").alias("v"))
+        contribs = _spmv(shares, x, "src", "dst", "share")
         dm = ranks.join(dangling, "node", "left_semi").agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
         )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dm))
-            .select(
-                "node",
-                (
-                    F.lit((1 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("inflow"), F.lit(0.0)) + F.col("dm") / F.lit(float(n)))
-                ).alias("rank"),
-            )
+        ranks = nodes.join(contribs, "node", "left").crossJoin(F.broadcast(dm)).select(
+            "node",
+            (teleport + F.lit(d) * (F.coalesce(F.col("inflow"), F.lit(0.0)) + back)).alias("rank"),
         )
         # Checkpoint EVERY iteration: the next iteration's dangling-mass
         # aggregate re-reads ``ranks``; un-checkpointed, that branch would
-        # recompute the whole previous superstep (join+agg) a second time —
-        # one cheap materialization beats one redundant shuffle. Lazy (see
-        # the comment above this function).
-        if state_partitions is not None:
-            ranks = ranks.coalesce(state_partitions)
-        ranks = ranks.localCheckpoint(eager=False)
+        # recompute the whole previous superstep (join+agg) a second time.
+        ranks = _keep(ranks, state_partitions, eager=False)
     return ranks
 
 
@@ -640,85 +669,6 @@ def kcore(edges: DataFrame, k: int = 2, max_iter: int = 12) -> DataFrame:
     return final.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("core_deg")
     )
-
-
-def pagerank_personalized(
-    edges: DataFrame,
-    seeds: DataFrame,
-    iters: int = 10,
-    damping: float = 0.85,
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Personalized (seeded) PageRank: (node, rank) — "influence of THIS
-    entity set" (reference README.md:13 'highlight'). The teleport vector is
-    restricted to ``seeds`` (node): rank₀ = tele; rankₖ₊₁(v) = (1-d)·tele(v)
-    + d·(inflowₖ(v) + dmₖ·tele(v)) where tele(v) = 1/|S| on seeds, else 0 —
-    the standard PPR recurrence; dangling mass returns to the seed set.
-
-    Same per-iteration cost shape as :func:`pagerank` (one contribution
-    join + agg, one dangling scan+agg, scalar broadcast); the teleport
-    column rides the checkpointed node frame, so personalization adds no
-    extra shuffle. Kept as its own function (not a pagerank() parameter) so
-    the uniform op's oracle-matched float sequence stays byte-stable.
-    """
-    e = edges.select("src", "dst")
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    s = seeds.select("node").distinct()
-    ns = s.count()
-    if ns == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
-    nodes = (
-        nodes.join(s.withColumn("__seed", F.lit(1)), "node", "left")
-        .select(
-            "node",
-            F.when(F.col("__seed").isNotNull(), F.lit(1.0) / F.lit(float(ns)))
-            .otherwise(F.lit(0.0))
-            .alias("tele"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    out_deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
-    shares = e.join(out_deg, "src").select(
-        "src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("share")
-    )
-    if state_partitions is not None:
-        shares = shares.coalesce(state_partitions)
-    shares = shares.localCheckpoint(eager=True)
-    dangling = nodes.join(out_deg, nodes.node == out_deg.src, "left_anti").coalesce(
-        1
-    ).localCheckpoint(eager=True)
-    ranks = nodes.select("node", F.col("tele").alias("rank"))
-    d = float(damping)
-    for _ in range(iters):
-        contribs = (
-            shares.join(ranks, shares.src == ranks.node)
-            .select(F.col("dst").alias("node"), (F.col("rank") * F.col("share")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        dm = ranks.join(dangling.select("node"), "node", "left_semi").agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dm))
-            .select(
-                "node",
-                (
-                    F.lit(1 - d) * F.col("tele")
-                    + F.lit(d)
-                    * (F.coalesce(F.col("inflow"), F.lit(0.0)) + F.col("dm") * F.col("tele"))
-                ).alias("rank"),
-            )
-        )
-        if state_partitions is not None:
-            ranks = ranks.coalesce(state_partitions)
-        ranks = ranks.localCheckpoint(eager=False)
-    return ranks
 
 
 def betweenness(
@@ -813,10 +763,9 @@ def betweenness(
                 "c",
             )
             edelta = e_part if edelta is None else edelta.unionByName(e_part)
-        contrib = terms.groupBy("source", "node").agg(spark_f.sum("c").alias("delta"))
-        if state_partitions is not None:
-            contrib = contrib.coalesce(state_partitions)
-        contrib = contrib.localCheckpoint(eager=True)
+        contrib = _keep(
+            terms.groupBy("source", "node").agg(spark_f.sum("c").alias("delta")), state_partitions
+        )
         delta = contrib if delta is None else delta.unionByName(contrib)
     if edge_scores:
         if edelta is None:
@@ -854,47 +803,30 @@ def betweenness(
 def hits(edges: DataFrame, iters: int = 10, state_partitions: int | None = None) -> DataFrame:
     """HITS hub/authority scores, fixed iterations: (node, hub, authority).
 
-    Kleinberg 1999 (public). Per iteration: authority(v) = Σ_{u→v} hub(u),
-    then hub(u) = Σ_{u→v} authority(v), each L1-normalized. The normalizer
-    is a broadcast scalar folded into the plan (the pagerank dangling-mass
-    pattern — no driver round-trips); both vectors are checkpointed per
-    iteration to cut lineage. All supersteps are join+partial-agg on the
-    node key — the BFS/PageRank cost envelope at any scale."""
-    e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    Kleinberg 1999 (public). Per iteration two :func:`_spmv` half-steps:
+    authority(v) = Σ_{u→v} hub(u), then hub(u) = Σ_{u→v} authority(v), each
+    L1-normalized by a broadcast scalar folded into the plan (the pagerank
+    dangling-mass pattern — no driver round-trips). The vectors stay
+    sparse through all 2·iters half-steps: a node with no row has score
+    exactly 0, which adds nothing to the next sums or to the normalizer,
+    so the fill to every node is one pair of joins at the end."""
+    e = _keep(edges.select("src", "dst").distinct())
+    nodes = _keep(_nodes(e))
     if nodes.isEmpty():
         return nodes.withColumn("hub", F.lit(0.0)).withColumn("authority", F.lit(0.0))
-    h = nodes.withColumn("v", F.lit(1.0)).localCheckpoint(eager=True)
-    a = h
+    h = a = nodes.withColumn("v", F.lit(1.0))
 
-    def _phase(vec: DataFrame, key_in: str, key_out: str) -> DataFrame:
-        # No per-phase fill join (round-15): a node absent from `raw`
-        # has score exactly 0 and a zero score contributes nothing to the
-        # next phase's sums or to the L1 normalizer, so carrying the
-        # sparse vector through all 2·iters phases is value-identical —
-        # the old nodes-left-join-coalesce(0) per phase is done ONCE at
-        # the end instead (20 joins → 2 at iters=10).
-        raw = (
-            e.join(vec, F.col(key_in) == F.col("node"))
-            .groupBy(F.col(key_out).alias("node"))
-            .agg(F.sum("v").alias("raw"))
-        )
-        tot = raw.agg(F.sum("raw").alias("tot"))
+    def half(x: DataFrame, src: str, dst: str) -> DataFrame:
+        raw = _spmv(e, x, src, dst)
+        tot = raw.agg(F.sum("inflow").alias("tot"))
         out = raw.crossJoin(F.broadcast(tot)).select(
-            "node", (F.col("raw") / F.col("tot")).alias("v")
+            "node", (F.col("inflow") / F.col("tot")).alias("v")
         )
-        if state_partitions is not None:
-            out = out.coalesce(state_partitions)
-        return out.localCheckpoint(eager=True)
+        return _keep(out, state_partitions, eager=False)
 
     for _ in range(iters):
-        a = _phase(h, "src", "dst")   # authority from hubs over in-edges
-        h = _phase(a, "dst", "src")   # hub from authorities over out-edges
+        a = half(h, "src", "dst")  # authority from hubs over in-edges
+        h = half(a, "dst", "src")  # hub from authorities over out-edges
     return (
         nodes.join(h.select(F.col("node").alias("hn"), F.col("v").alias("hub")),
                    nodes.node == F.col("hn"), "left")
@@ -916,37 +848,43 @@ def eigenvector(
     NetworkX-style semantics on the UNDIRECTED graph (symmetrized
     adjacency — the principal eigenvector exists and the power method
     converges; on the raw DAG the adjacency is nilpotent and the limit
-    would be the zero vector). Per iteration x ← A·x, then L2-normalize;
-    the norm is a broadcast scalar folded into the plan (the HITS
-    normalizer pattern — no driver round-trip), state checkpointed per
-    iteration to cut lineage. Every superstep is a join + partial agg on
-    the node key — PageRank's cost envelope at any scale."""
-    e = undirect(edges.select("src", "dst")).distinct().localCheckpoint(eager=True)
-    nodes = e.select(F.col("src").alias("node")).distinct().localCheckpoint(eager=True)
+    would be the zero vector). Per iteration one :func:`_spmv` step
+    x ← A·x, then L2-normalize by a broadcast scalar folded into the plan
+    (the HITS normalizer pattern — no driver round-trip). The adjacency is
+    symmetrized, so every node has an in-edge and A·x has a row per node:
+    no fill join."""
+    e = _keep(undirect(edges.select("src", "dst")).distinct())
+    nodes = _keep(e.select(F.col("src").alias("node")).distinct())
     if nodes.isEmpty():
         return nodes.withColumn("eig", F.lit(0.0))
-    x = nodes.withColumn("v", F.lit(1.0)).localCheckpoint(eager=True)
+    x = nodes.withColumn("v", F.lit(1.0))
     for _ in range(iters):
-        # No per-iteration fill join (round-15): the adjacency is
-        # SYMMETRIZED, so every node has ≥1 in-edge and the A·x aggregate
-        # always yields a row per node — the old nodes-left-join-coalesce(0)
-        # was provably a no-op costing one join per iteration.
-        filled = (
-            e.join(x, e.src == x.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("v").alias("raw"))
-        )
-        nrm = filled.agg(F.sqrt(F.sum(F.col("raw") * F.col("raw"))).alias("nrm"))
-        x = filled.crossJoin(F.broadcast(nrm)).select(
+        raw = _spmv(e, x, "src", "dst")
+        nrm = raw.agg(F.sqrt(F.sum(F.col("inflow") * F.col("inflow"))).alias("nrm"))
+        x = raw.crossJoin(F.broadcast(nrm)).select(
             "node",
-            F.when(F.col("nrm") > 0, F.col("raw") / F.col("nrm"))
+            F.when(F.col("nrm") > 0, F.col("inflow") / F.col("nrm"))
             .otherwise(F.lit(0.0))
             .alias("v"),
         )
-        if state_partitions is not None:
-            x = x.coalesce(state_partitions)
-        x = x.localCheckpoint(eager=True)
+        x = _keep(x, state_partitions, eager=False)
     return x.select("node", F.col("v").alias("eig"))
+
+
+def katz(edges: DataFrame, iters: int = 4, alpha: float = 0.1) -> DataFrame:
+    """Truncated Katz centrality: (node, katz), x₀ = 1 and
+    xₖ₊₁(v) = 1 + alpha·Σ_{u→v} xₖ(u) (parallel edges count once each), one
+    :func:`_spmv` step per iteration — after ``iters`` steps, Σ over
+    k ≤ iters of alphaᵏ·|walks of length k ending at v|."""
+    e = _keep(edges.select("src", "dst"))
+    nodes = _keep(_nodes(e))
+    x = nodes.withColumn("v", F.lit(1.0))
+    for _ in range(iters):
+        x = nodes.join(_spmv(e, x, "src", "dst"), "node", "left").select(
+            "node", (F.lit(1.0) + F.lit(alpha) * F.coalesce("inflow", F.lit(0.0))).alias("v")
+        )
+        x = _keep(x, eager=False)
+    return x.select("node", F.col("v").alias("katz"))
 
 
 def _pin(df: DataFrame, pinned: list) -> DataFrame:

@@ -42,13 +42,15 @@ def adjacency(src: list[str], dst: list[str]) -> dict[str, list[str]]:
     return adj
 
 
-def bfs(neighbours, seeds: list, hops: int) -> dict:
-    """Min-hop distance ≤ ``hops`` from ``seeds``, in discovery order.
+def bfs(neighbours, seeds: list, hops: int):
+    """Yield (node, min-hop distance ≤ ``hops`` from ``seeds``) in
+    discovery order, so a caller can stop at a row budget mid-traversal.
     ``neighbours(node)`` gives the nodes one hop from ``node`` (None for
     none); an adjacency dict stands for its ``get``."""
     if isinstance(neighbours, dict):
         neighbours = neighbours.get
     dist = dict.fromkeys(seeds, 0)
+    yield from dist.items()
     frontier = list(dist)
     for level in range(1, hops + 1):
         nxt = []
@@ -57,10 +59,10 @@ def bfs(neighbours, seeds: list, hops: int) -> dict:
                 if m not in dist:
                     dist[m] = level
                     nxt.append(m)
+                    yield m, level
         if not nxt:
             break
         frontier = nxt
-    return dist
 
 
 class SeekGraph:
@@ -95,7 +97,7 @@ class SeekGraph:
     def distances(self, seeds, types, direction, min_hops, max_hops, budget):
         """``multi_source_distances`` rows (source, node, dist) with
         ``min_hops <= dist <= max_hops``, from each seed that is a source of
-        the directed view; None past ``budget`` rows."""
+        the directed view; None at the first row past ``budget``."""
         rows = []
 
         def neighbours(node):
@@ -104,10 +106,11 @@ class SeekGraph:
         for s in dict.fromkeys(seeds):
             if next(self.steps(s, types, direction), None) is None:
                 continue
-            dist = bfs(neighbours, [s], max_hops)
-            rows += [(s, n, d) for n, d in dist.items() if d >= min_hops]
-            if len(rows) > budget:
-                return None
+            for n, d in bfs(neighbours, [s], max_hops):
+                if d >= min_hops:
+                    rows.append((s, n, d))
+                    if len(rows) > budget:
+                        return None
         return rows
 
     def paths(self, seeds, types, direction, min_hops, max_hops, unique, budget):

@@ -219,7 +219,7 @@ def neighborhood(spark: SparkSession, sf_dir: str, entities: list[str], hops: in
         if view.undirected is None:
             view.undirected = adjacency(view.src, view.dst)
         adj = view.undirected
-    return bfs(adj, entities, hops)
+    return dict(bfs(adj, entities, hops))
 
 
 def expand(spark: SparkSession, sf_dir: str, entities: list[str], hops: int) -> DataFrame | None:

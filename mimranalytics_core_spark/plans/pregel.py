@@ -27,31 +27,27 @@ from pyspark.sql import functions as F
 
 
 CHANGED_COL = "__changed"
+# Convergence is checked every 2nd superstep: a monotone step applied to an
+# already-converged state is a no-op, so one wasted cheap superstep buys half
+# the driver round-trips — per-job overhead dominates these small loops.
+CHECK_EVERY = 2
 
 
 def iterate_fixpoint(
     state: DataFrame,
     step: Callable[[DataFrame], DataFrame],
-    changed: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
     max_iter: int = 20,
-    check_every: int = 2,
     state_partitions: int | None = None,
 ) -> DataFrame:
-    """Iterate ``state = step(state)`` until no row changed.
+    """Iterate ``state = step(state)`` until no row changed, at most
+    ``max_iter`` supersteps.
 
-    Two convergence protocols:
-
-    - **Folded flag (preferred)**: ``step`` emits a boolean ``__changed``
-      column alongside the new state. Convergence = no flagged row in the
-      already-materialized checkpoint — a filter scan, no extra join and no
-      extra shuffle. The flag is stripped from the returned state.
-    - **``changed`` callback (legacy)**: returns a DataFrame whose emptiness
-      signals convergence — costs one old-vs-new join per check.
-
-    ``check_every`` batches convergence checks: a monotone step applied to an
-    already-converged state is a no-op, so checking every k-th superstep
-    trades ≤(k-1) wasted cheap supersteps for k× fewer driver round-trips —
-    per-job overhead dominates these small-frontier loops.
+    Convergence protocol (folded flag): ``step`` emits a boolean
+    ``__changed`` column (:data:`CHANGED_COL`) alongside the new state.
+    Convergence = no flagged row in the already-materialized checkpoint — a
+    filter scan, no extra join and no extra shuffle. The flag is stripped
+    from the returned state. A ``step`` that emits no flag runs exactly
+    ``max_iter`` supersteps.
 
     ``state_partitions``: coalesce the state to this many partitions before
     each checkpoint. For loops whose state is far smaller than the input
@@ -68,7 +64,6 @@ def iterate_fixpoint(
         return state
     for i in range(max_iter):
         new_state = step(state.drop(CHANGED_COL) if CHANGED_COL in state.columns else state)
-        flagged = CHANGED_COL in new_state.columns
         if state_partitions is not None:
             new_state = new_state.coalesce(state_partitions)
         # Checkpoint every step: each step embeds a join against the previous
@@ -78,11 +73,11 @@ def iterate_fixpoint(
         # graph_algos.pagerank): the checkpoint persists on first use (the
         # convergence scan or the next superstep) with identical reuse.
         new_state = new_state.localCheckpoint(eager=False)
-        if (i + 1) % check_every == 0 or i == max_iter - 1:
-            if flagged:
-                if new_state.filter(F.col(CHANGED_COL)).isEmpty():
-                    return new_state.drop(CHANGED_COL)
-            elif changed is not None and changed(state, new_state).isEmpty():
-                return new_state
+        if (
+            CHANGED_COL in new_state.columns
+            and ((i + 1) % CHECK_EVERY == 0 or i == max_iter - 1)
+            and new_state.filter(F.col(CHANGED_COL)).isEmpty()
+        ):
+            return new_state.drop(CHANGED_COL)
         state = new_state
     return state.drop(CHANGED_COL) if CHANGED_COL in state.columns else state

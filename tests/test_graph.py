@@ -94,10 +94,8 @@ def test_pagerank_mass_and_ordering(spark, edges):
 def test_pagerank_personalized_matches_power_iteration(spark, edges):
     """PPR on the 6-node fixture vs an independent dense power iteration
     (same recurrence computed with plain Python floats)."""
-    from mimranalytics_core_spark.functions.graph_algos import pagerank_personalized
-
     seeds = spark.createDataFrame([("A",), ("B",)], "node STRING")
-    got = _map(pagerank_personalized(edges, seeds, iters=10), "node", "rank")
+    got = _map(pagerank(edges, iters=10, seeds=seeds), "node", "rank")
 
     nodes = sorted({s for s, _, _ in EDGES} | {d for _, d, _ in EDGES})
     out = {}

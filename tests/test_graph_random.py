@@ -10,10 +10,10 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from mimranalytics_core_spark.functions import graph_algos as ga
 from mimranalytics_core_spark.functions.graph_algos import (
     bfs_distances,
     connected_components,
-    pagerank,
     ubo_closure,
     undirect,
 )
@@ -68,32 +68,6 @@ def test_components_match_union_find(spark, redges):
         for r in connected_components(redges, max_iter=30, state_partitions=4).collect()
     }
     assert got == exp_label
-
-
-def test_pagerank_matches_power_iteration(spark, redges):
-    nodes = sorted({x for e in EDGE_LIST for x in e[:2]})
-    out = {v: [] for v in nodes}
-    for s, d, _ in EDGE_LIST:
-        out[s].append(d)
-    n = len(nodes)
-    rank = {v: 1.0 / n for v in nodes}
-    d = 0.85
-    for _ in range(10):
-        nxt = {v: 0.0 for v in nodes}
-        dangling = 0.0
-        for v in nodes:
-            if out[v]:
-                share = rank[v] / len(out[v])
-                for w in out[v]:
-                    nxt[w] += share
-            else:
-                dangling += rank[v]
-        rank = {v: (1 - d) / n + d * (nxt[v] + dangling / n) for v in nodes}
-
-    got = {r.node: r.rank for r in pagerank(redges, iters=10, state_partitions=4).collect()}
-    assert set(got) == set(nodes)
-    for v in nodes:
-        assert abs(got[v] - rank[v]) < 1e-9, (v, got[v], rank[v])
 
 
 def test_bfs_matches_reference(spark, redges):
@@ -308,34 +282,6 @@ def test_star_contraction_components_match_union_find(spark):
         )
         got = {r.node: r.canonical for r in final.collect()}
         assert got == want, f"trial {trial}"
-
-
-def test_eigenvector_matches_power_iteration(spark, redges):
-    from mimranalytics_core_spark.functions.graph_algos import eigenvector
-
-    # reference: same fixed-iteration power method on the symmetrized graph
-    import math
-
-    adj = {}
-    for s, d, _ in EDGE_LIST:
-        adj.setdefault(s, set()).add(d)
-        adj.setdefault(d, set()).add(s)
-    nodes = sorted(adj)
-    x = {v: 1.0 for v in nodes}
-    for _ in range(12):
-        raw = {v: sum(x[u] for u in adj[v]) for v in nodes}
-        nrm = math.sqrt(sum(r * r for r in raw.values()))
-        x = {v: (raw[v] / nrm if nrm > 0 else 0.0) for v in nodes}
-
-    got = {
-        r.node: r.eig
-        for r in eigenvector(redges, iters=12, state_partitions=4).collect()
-    }
-    assert set(got) == set(nodes)
-    for v in nodes:
-        assert abs(got[v] - x[v]) < 1e-9, (v, got[v], x[v])
-    # the dominant eigenvector is non-negative and non-trivial
-    assert all(val >= 0 for val in got.values()) and max(got.values()) > 0
 
 
 def test_boruvka_msf_matches_kruskal(spark):
@@ -624,3 +570,139 @@ def test_bfs_family_matches_reference(spark, seeds, max_depth):
     _assert_close(
         {(r.src, r.dst): r.edge_betweenness for r in got_edge}, want_edge, "edge betweenness"
     )
+
+
+# --- the power-iteration family against plain-Python power iteration ------
+
+# w0's only edge carries no mass, so under the weighted variant it dangles
+WEIGHTED_EDGES = EDGE_LIST + [("w0", "v1", 0.0)]
+# v12 has no out-edge (a dangling seed); v0 is repeated
+PR_SEEDS = ["v12", "v0", "v0"]
+
+
+def _pagerank_reference(edges, seeds=None, iters=10, d=0.85):
+    """Each source splits its rank in proportion to its positive edge
+    weights (a source with none dangles); the teleport and the dangling
+    mass are uniform, or spread over ``seeds``."""
+    nodes = sorted({x for e in edges for x in e[:2]})
+    n = len(nodes)
+    out: dict[str, list] = {}
+    for s, t, w in edges:
+        if w > 0:
+            out.setdefault(s, []).append((t, w))
+    if seeds is None:
+        rank = dict.fromkeys(nodes, 1.0 / n)
+    else:
+        tele = {v: 1.0 / len(set(seeds)) if v in seeds else 0.0 for v in nodes}
+        rank = dict(tele)
+    for _ in range(iters):
+        inflow = dict.fromkeys(nodes, 0.0)
+        for s, ts in out.items():
+            tot = sum(w for _, w in ts)
+            for t, w in ts:
+                inflow[t] += rank[s] * w / tot
+        dm = sum(rank[v] for v in nodes if v not in out)
+        if seeds is None:
+            rank = {v: (1 - d) / n + d * (inflow[v] + dm / n) for v in nodes}
+        else:
+            rank = {v: (1 - d) * tele[v] + d * (inflow[v] + dm * tele[v]) for v in nodes}
+    return rank
+
+
+def _hits_reference(edges, iters=10):
+    pairs = sorted({(s, t) for s, t, _ in edges})
+    nodes = sorted({x for p in pairs for x in p})
+    hub = dict.fromkeys(nodes, 1.0)
+    for _ in range(iters):
+        auth = dict.fromkeys(nodes, 0.0)
+        for s, t in pairs:
+            auth[t] += hub[s]
+        auth = {v: x / sum(auth.values()) for v, x in auth.items()}
+        hub = dict.fromkeys(nodes, 0.0)
+        for s, t in pairs:
+            hub[s] += auth[t]
+        hub = {v: x / sum(hub.values()) for v, x in hub.items()}
+    return {v: (hub[v], auth[v]) for v in nodes}
+
+
+def _eigenvector_reference(edges, iters=12):
+    """L2-normalised power method on the symmetrized graph."""
+    import math
+
+    adj: dict[str, set] = {}
+    for s, t, _ in edges:
+        adj.setdefault(s, set()).add(t)
+        adj.setdefault(t, set()).add(s)
+    x = dict.fromkeys(adj, 1.0)
+    for _ in range(iters):
+        raw = {v: sum(x[u] for u in adj[v]) for v in adj}
+        nrm = math.sqrt(sum(r * r for r in raw.values()))
+        x = {v: raw[v] / nrm if nrm > 0 else 0.0 for v in adj}
+    return x
+
+
+def _katz_reference(edges, iters=4, alpha=0.1):
+    nodes = {x for e in edges for x in e[:2]}
+    x = dict.fromkeys(nodes, 1.0)
+    for _ in range(iters):
+        inflow = dict.fromkeys(nodes, 0.0)
+        for s, t, _ in edges:
+            inflow[t] += x[s]
+        x = {v: 1.0 + alpha * inflow[v] for v in nodes}
+    return x
+
+
+# case: (edges, call(edges, seeds), reference(edges))
+POWER_CASES = {
+    "pagerank": (
+        EDGE_LIST,
+        lambda e, s: ga.pagerank(e.select("src", "dst"), iters=10, state_partitions=4),
+        lambda edges: _pagerank_reference([(a, b, 1.0) for a, b, _ in edges]),
+    ),
+    "pagerank-weighted": (
+        WEIGHTED_EDGES,
+        lambda e, s: ga.pagerank(e, iters=10, state_partitions=4, weight_col="weight"),
+        _pagerank_reference,
+    ),
+    "pagerank-seeded": (
+        EDGE_LIST,
+        lambda e, s: ga.pagerank(e.select("src", "dst"), iters=10, state_partitions=4, seeds=s),
+        lambda edges: _pagerank_reference([(a, b, 1.0) for a, b, _ in edges], PR_SEEDS),
+    ),
+    "hits": (
+        EDGE_LIST,
+        lambda e, s: ga.hits(e.select("src", "dst"), iters=10, state_partitions=4),
+        _hits_reference,
+    ),
+    "eigenvector": (
+        EDGE_LIST,
+        lambda e, s: ga.eigenvector(e.select("src", "dst"), iters=12, state_partitions=4),
+        _eigenvector_reference,
+    ),
+    "katz": (
+        EDGE_LIST,
+        lambda e, s: ga.katz(e.select("src", "dst"), iters=4, alpha=0.1),
+        _katz_reference,
+    ),
+}
+
+
+def _by_node(df) -> dict:
+    return {r[0]: tuple(r[1:]) for r in df.collect()}
+
+
+@pytest.mark.parametrize("case", list(POWER_CASES))
+def test_power_family_matches_power_iteration(spark, case):
+    edges, call, reference = POWER_CASES[case]
+    schema = "src STRING, dst STRING, weight DOUBLE"
+    seeds = spark.createDataFrame([(s,) for s in PR_SEEDS], "node STRING")
+    got = _by_node(call(spark.createDataFrame(edges, schema), seeds))
+    want = {v: x if isinstance(x, tuple) else (x,) for v, x in reference(edges).items()}
+    assert sorted(got) == sorted(want)
+    for v, x in want.items():
+        assert all(abs(g - w) < 1e-9 for g, w in zip(got[v], x)), (v, got[v], x)
+    assert call(spark.createDataFrame([], schema), seeds).count() == 0
+    if case == "pagerank-seeded":  # no seeds: every node ranks 0.0
+        none = spark.createDataFrame([], "node STRING")
+        got = _by_node(call(spark.createDataFrame(edges, schema), none))
+        assert got == dict.fromkeys(want, (0.0,))

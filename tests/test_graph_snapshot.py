@@ -78,7 +78,7 @@ def test_bfs_kernel_matches_spark_bfs(spark, seed):
     seed_df = spark.createDataFrame([(s,) for s in seeds], "node STRING")
     for hops in range(5):
         want = {r.node: r.dist for r in bfs_distances(undirect(df), seed_df, max_depth=hops).collect()}
-        got = gs.bfs(adj, seeds, hops)
+        got = dict(gs.bfs(adj, seeds, hops))
         assert got == want, (seed, hops)
         assert got["x:404"] == 0
 
@@ -285,6 +285,26 @@ def test_kernels_stop_past_budget():
     assert g.paths(["c:0", "c:1"], None, "both", 1, 3, False, len(full)) == full
     assert g.paths(["c:0", "c:1"], None, "both", 1, 3, False, len(full) - 1) is None
     assert g.distances(["c:0", "c:1"], None, "both", 0, 3, 1) is None
+
+
+def test_distances_stop_at_first_row_past_budget():
+    g, _, _ = _seek_graph(_typed_edges(11), False)
+    calls = 0
+    steps = g.steps
+
+    def counted(*args):
+        nonlocal calls
+        calls += 1
+        return steps(*args)
+
+    g.steps = counted
+    full = g.distances(["c:0"], None, "both", 0, 3, 10**6)
+    full_calls, calls = calls, 0
+    assert len(full) > 2
+    assert g.distances(["c:0"], None, "both", 0, 3, len(full)) == full
+    calls = 0
+    assert g.distances(["c:0"], None, "both", 0, 3, 1) is None
+    assert calls < full_calls
 
 
 # (label, call) pairs on SF_SMALL; each one is eligible for a seek

@@ -27,7 +27,11 @@ Maps 1:1 onto SURVEY.md §2's planned inventory. Regenerate with
 """
 
 
-def main() -> None:
+OUT = Path(__file__).resolve().parent.parent / "OPERATORS.md"
+
+
+def render() -> str:
+    """The text of OPERATORS.md for the current registry."""
     ops = all_ops()
     by_cat: dict[str, list] = defaultdict(list)
     for spec in ops.values():
@@ -47,10 +51,12 @@ def main() -> None:
             oracle = "✔" if spec.oracle is not None else "*rows-only*"
             notes = " ".join(spec.notes.split())
             lines.append(f"| `{spec.name}` | {oracle} | {notes} |")
-    Path(__file__).resolve().parent.parent.joinpath("OPERATORS.md").write_text(
-        "\n".join(lines) + "\n"
-    )
-    print(f"wrote OPERATORS.md: {len(ops)} ops, {n_oracle} with oracles")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    OUT.write_text(render())
+    print(f"wrote {OUT.name}")
 
 
 if __name__ == "__main__":

@@ -8,8 +8,10 @@ normalised per nation), then for each kernel of
 ``functions/graph_kernels.py`` prints its wall time and ``tracemalloc``
 peak, and with ``--spark 1`` the wall time of the Spark function it
 stands in for on the same edges (each forced to completion by a count).
-The last row is a bound-id seek: ``SeekGraph.distances`` against Spark
-``multi_source_distances`` from 16 customers at 3 hops.
+The last rows are a bound-id seek: ``SeekGraph.distances`` against Spark
+``multi_source_distances`` from 16 customers at 3 hops, and the same seek
+held to ``graph_snapshot.MAX_PATH_ROWS``, which it exceeds: the kernel's
+cost of declining before Spark answers (kernel only).
 Set ``SPARK_GRAFT_CPUS`` to pin the Spark side's local[N].
 """
 
@@ -29,6 +31,7 @@ import pyarrow.compute as pc
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mimranalytics_core_spark.functions import graph_kernels as gk  # noqa: E402
+from mimranalytics_core_spark.functions.graph_snapshot import MAX_PATH_ROWS  # noqa: E402
 
 VIZ_SEEDS = ["n:3", "n:17"]  # api.export_graph_viz at 2 hops, as the nightly pass calls it
 # a bound-id seek at the seed cap (graph_snapshot.MAX_SEEDS), 3 hops on the undirected view
@@ -77,7 +80,7 @@ def kernels(tbl: pa.Table) -> dict:
 
     def viz():
         inside = np.zeros(n, bool)
-        seen = pa.array(list(gk.bfs(adj, VIZ_SEEDS, 2)))
+        seen = pa.array([v for v, _ in gk.bfs(adj, VIZ_SEEDS, 2)])
         inside[pc.index_in(seen, value_set=nodes).drop_null().to_numpy()] = True
         keep = inside[src] & inside[dst]
         return np.unique(src[keep] * n + dst[keep])
@@ -94,6 +97,9 @@ def kernels(tbl: pa.Table) -> dict:
         "viz (bfs + induced edges)": viz,
         "seek distances (16 seeds, 3 hops)": lambda: seek.distances(
             SEEK_SEEDS, None, "both", 0, 3, budget=10**9
+        ),
+        "seek past budget (16 seeds, 3 hops)": lambda: seek.distances(
+            SEEK_SEEDS, None, "both", 0, 3, budget=MAX_PATH_ROWS
         ),
     }
 
