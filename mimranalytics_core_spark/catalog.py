@@ -210,19 +210,26 @@ def hierarchy_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: built by narrow projections + a single small agg per tier; the
     nation/region tiers are tiny (broadcastable) at any scale factor.
+    The nation totals join LEFT on a non-null key: the aggregate is
+    distinct on ``c_nationkey``, so when no consumer reads ``weight``
+    Catalyst's outer-join elimination drops the aggregate and its
+    broadcast (a weightless traversal scans ``customer`` once). Weighted
+    consumers (UBO, the graph snapshot, ``carry_weight``) keep the
+    partial aggregate plus broadcast, which beats a window at scale (a
+    window would shuffle all of ``customer``).
     """
     customer = spark.table("customer")
     supplier = spark.table("supplier")
     nation = spark.table("nation")
 
-    cust_pos = customer.select(
+    cust_pos = customer.filter(F.col("c_nationkey").isNotNull()).select(
         "c_custkey",
         "c_nationkey",
         F.greatest(F.col("c_acctbal"), F.lit(0.0)).alias("bal"),
     )
     nat_tot = cust_pos.groupBy("c_nationkey").agg(F.sum("bal").alias("tot"))
     c_edges = (
-        cust_pos.join(nat_tot, "c_nationkey")
+        cust_pos.join(nat_tot, "c_nationkey", "left")
         .select(
             F.concat(F.lit("c:"), F.col("c_custkey")).alias("src"),
             F.concat(F.lit("n:"), F.col("c_nationkey")).alias("dst"),

@@ -519,22 +519,25 @@ _KNOWN_RELS = {
     "buys_from", "co_located",                    # trade_credit
     "placed", "contains", "supplies",             # business fact tiers
 }
-# endpoint-tier pair per stored relationship type (node-id prefixes of the
-# catalog edge builders). Used by the clause-frame trail guard: edge keys
-# are `src>dst` strings, so two TYPED segments can only ever bind the same
-# relationship when their type sets intersect OR two of their types share
-# an (unordered) endpoint-tier pair — otherwise the pairwise
-# arrays_overlap uniqueness filter is provably always true and is elided,
-# along with the per-segment edge-key arrays it reads (round-15 perf:
-# cypher_supply_chain carried 10 no-op array filters plus five 600k-row
-# array columns through its join chain).
-_REL_TIERS = {
-    "customer_of": frozenset("cn"), "supplier_of": frozenset("sn"),
-    "nation_of": frozenset("nr"), "owns_stake": frozenset("cs"),
-    "placed": frozenset("co"), "contains": frozenset("op"),
-    "supplies": frozenset("sp"), "buys_from": frozenset("s"),
-    "co_located": frozenset("s"),
+# ordered (src, dst) endpoint label per stored relationship type (the tiers
+# of the catalog edge builders). It gives a label-less variable at the end
+# of a typed segment its label (_implied_labels), and its unordered
+# pairs feed the clause-frame trail guard: edge keys are `src>dst` strings,
+# so two TYPED segments can only ever bind the same relationship when their
+# type sets intersect OR two of their types share an (unordered)
+# endpoint-tier pair — otherwise the pairwise arrays_overlap uniqueness
+# filter is provably always true and is elided, along with the per-segment
+# edge-key arrays it reads (round-15 perf: cypher_supply_chain carried 10
+# no-op array filters plus five 600k-row array columns through its join
+# chain).
+_REL_ENDS = {
+    "customer_of": ("customer", "nation"), "supplier_of": ("supplier", "nation"),
+    "nation_of": ("nation", "region"), "owns_stake": ("customer", "supplier"),
+    "placed": ("customer", "order"), "contains": ("order", "part"),
+    "supplies": ("supplier", "part"), "buys_from": ("customer", "supplier"),
+    "co_located": ("supplier", "customer"),
 }
+_REL_TIERS = {t: frozenset(ends) for t, ends in _REL_ENDS.items()}
 
 
 def _segs_could_share_rel(a: dict, b: dict) -> bool:
@@ -550,6 +553,35 @@ def _segs_could_share_rel(a: dict, b: dict) -> bool:
     return bool(
         {_REL_TIERS[t] for t in ta} & {_REL_TIERS[t] for t in tb}
     )
+
+
+def _implied_labels(clauses) -> dict[str, str]:
+    """Labels that typed segments imply for their endpoint variables.
+
+    A segment of at least one hop ends on an edge of one of its types, so
+    its far variable sits on that type's dst tier (src tier for the near
+    one; either tier when undirected). When every type agrees on the
+    label, the variable holds it: ``r`` in
+    ``(n)-[:NATION_OF]->(r)`` is a Region. An OPTIONAL clause implies
+    labels only for the variables it binds first, since it keeps earlier
+    bindings on its null-extended rows."""
+    out: dict[str, str] = {}
+    for cl in clauses:
+        for seg in cl["segments"]:
+            types = seg.get("types")
+            if not types or seg["min_hops"] < 1 or any(t not in _REL_ENDS for t in types):
+                continue
+            d = seg.get("direction", "out")
+            for var, end in ((seg["src"], 0), (seg["dst"], 1)):
+                if cl.get("optional") and var not in cl.get("fresh", ()):
+                    continue
+                if d == "both":
+                    labs = {x for t in types for x in _REL_ENDS[t]}
+                else:  # the parser turns `<-` into an "out" segment
+                    labs = {_REL_ENDS[t][end] for t in types}
+                if len(labs) == 1:
+                    out.setdefault(var, labs.pop())
+    return out
 
 
 _REL_RE = re.compile(
@@ -7490,9 +7522,32 @@ def _run_single(
         for _cl in clauses:
             num_vars.update(_cl["vars"])
 
-    def _attr_id_col(var: str):
-        """Attribute-view join key in the frame's representation of var."""
-        return F.col("id_n" if var in num_vars else "id").alias(var)
+    # the label each stage-0 variable is known to hold: its pattern label,
+    # else the one its typed segments imply
+    labels0 = {**_implied_labels(clauses), **p["labels"]}
+
+    def _attach_props(fr: DataFrame, var: str, props, label=None, num=None):
+        """Attach var's properties to fr as ``var__prop`` columns (those fr
+        lacks) with one LEFT equi-join on the attribute view, label-pruned
+        when the label is known (the equality on the per-branch literal
+        folds, so the build side scans one base table, not the union)."""
+        num = var in num_vars if num is None else num
+        need = [pr for pr in props if f"{var}__{pr}" not in fr.columns]
+        if not need:
+            return fr
+        side = _attr_view()
+        if label:
+            side = side.filter(F.col("label") == label)
+        sel = [F.col("id_n" if num else "id").alias(var)]
+        sel += [F.col(pr).alias(f"{var}__{pr}") for pr in need]
+        return fr.join(side.select(*sel), var, "left")
+
+    def _owns(clause, var: str) -> bool:
+        """Do a clause frame's ``var__prop`` columns stay right once the
+        clause joins the bindings? Not for a variable an OPTIONAL clause
+        re-binds: its null-extended rows keep the variable's earlier value
+        but null the clause's columns."""
+        return not clause.get("optional") or var in clause.get("fresh", ())
 
     def _label_filter(fr: DataFrame, var: str, label: str) -> DataFrame:
         if var in num_vars:
@@ -7524,7 +7579,7 @@ def _run_single(
     )
 
 
-    def _clause_frame(clause, first_pred):
+    def _clause_frame(clause, first_pred, prop_vars=p["prop_vars"]):
         # per-path rows per segment (trail mode, edge keys kept), joined
         # on shared variables: one output row per PATH COMBINATION with
         # Cypher multiplicities, then the pairwise arrays_overlap filter
@@ -7532,7 +7587,7 @@ def _run_single(
         # (Neo4j: no relationship repeats anywhere in one MATCH pattern,
         # comma chains included; uniqueness does NOT span clauses).
         # Row-local array ops on <= max_hops keys — no extra shuffle.
-        def _node_frame(var, with_props: bool = False):
+        def _node_frame(var):
             # node-only chain (round-7): the frame is the node-id column
             # of the graph's node view. For the hierarchy graph that's
             # narrow projections + union (no shuffle); trade_credit
@@ -7562,16 +7617,17 @@ def _run_single(
                 if lab:
                     nodes = nodes.filter(F.col("label") == lab)
                 sel = [F.col("id_n" if numeric else "id").alias(var)]
-                if with_props:
-                    # cross-join chains pre-attach the props the query
-                    # reads (round-12): they live on the SAME attribute
-                    # row (zero extra joins), and with them present the
-                    # per-side WHERE conjuncts push BELOW the cross and
-                    # the cross-component equality becomes a hash-join
-                    # condition — without this the id-frame cartesian
-                    # enumerates the full pair space first (measured
-                    # 78×/decade on the comma-cartesian op)
-                    prs = set(p["prop_vars"].get(var, ())) | set(
+                if _owns(clause, var):
+                    # the node frame pre-attaches the props the query
+                    # reads: they live on the SAME attribute row, so a
+                    # labeled node-only MATCH scans its table once instead
+                    # of joining it to itself. For cross-join chains
+                    # (round-12) the per-side WHERE conjuncts then push
+                    # BELOW the cross and the cross-component equality
+                    # becomes a hash-join condition — without this the
+                    # id-frame cartesian enumerates the full pair space
+                    # first (measured 78×/decade on the comma-cartesian op)
+                    prs = set(prop_vars.get(var, ())) | set(
                         (clause.get("where_props") or {}).get(var, ())
                     )
                     sel += [
@@ -7593,10 +7649,9 @@ def _run_single(
             # The clause WHERE usually carries the equality that turns the
             # cross into a hash join at planning time (Catalyst rewrites
             # filter-over-cross; plan-asserted in tests/test_plans.py).
-            multi = len(clause["vars"]) > 1
-            cframe = _node_frame(clause["vars"][0], with_props=multi)
+            cframe = _node_frame(clause["vars"][0])
             for var in clause["vars"][1:]:
-                cframe = cframe.crossJoin(_node_frame(var, with_props=True))
+                cframe = cframe.crossJoin(_node_frame(var))
             return cframe
         pending = list(enumerate(clause["segments"]))
         # clause-level relationship uniqueness only binds between segment
@@ -7683,7 +7738,7 @@ def _run_single(
         # their node frames in, same cartesian semantics as above
         for var in clause["vars"]:
             if var not in cframe.columns:
-                cframe = cframe.crossJoin(_node_frame(var, with_props=True))
+                cframe = cframe.crossJoin(_node_frame(var))
         for i, j in share_pairs:
             cframe = cframe.filter(
                 ~F.arrays_overlap(F.col(ep_col[i]), F.col(ep_col[j]))
@@ -7801,28 +7856,14 @@ def _run_single(
         def _scoped_where(cframe, clause):
             """Apply a clause-scoped WHERE to the clause frame BEFORE the
             join — property accesses resolve against the attribute view on
-            the frame, then the helper columns are dropped (the global
-            attribute join re-adds whatever RETURN needs)."""
+            the frame; the helper columns of a variable the clause does not
+            own (see _owns) are then dropped, and the global attribute join
+            re-adds whatever RETURN needs."""
             if not clause.get("where"):
                 return cframe
             props = clause.get("where_props") or {}
-            if props:
-                attrs = _attr_view()
-                for var, prs in props.items():
-                    need = [
-                        pr for pr in prs
-                        if f"{var}__{pr}" not in cframe.columns
-                    ]  # cross-chain frames pre-attach theirs (round-12)
-                    if not need:
-                        continue
-                    side = attrs
-                    lab = p["labels"].get(var)
-                    if lab:  # label pruning — see the node-only clause note
-                        side = side.filter(F.col("label") == lab)
-                    sel = [_attr_id_col(var)] + [
-                        F.col(pr).alias(f"{var}__{pr}") for pr in need
-                    ]
-                    cframe = cframe.join(side.select(*sel), var, "left")
+            for var, prs in props.items():
+                cframe = _attach_props(cframe, var, prs, labels0.get(var))
             cframe = cframe.filter(
                 F.expr(
                     _decode_vars_sql(
@@ -7830,7 +7871,12 @@ def _run_single(
                     )
                 )
             )
-            drop = [f"{var}__{pr}" for var, prs in props.items() for pr in prs]
+            drop = [
+                f"{var}__{pr}"
+                for var, prs in props.items()
+                if not _owns(clause, var)
+                for pr in prs
+            ]
             return cframe.drop(*drop) if drop else cframe
 
         df = None
@@ -7888,25 +7934,9 @@ def _run_single(
                 and v_ in df.columns
                 and pr_ in _PROPS
             }
-            if _needed:
-                attrs_u = _attr_view()
-                for v_ in {v for v, _ in _needed}:
-                    prs_ = [pr for vv, pr in _needed if vv == v_]
-                    side_u = attrs_u
-                    lab_u = p["labels"].get(v_)
-                    if lab_u:
-                        side_u = side_u.filter(F.col("label") == lab_u)
-                    df = df.join(
-                        side_u.select(
-                            _attr_id_col(v_),
-                            *[
-                                F.col(pr).alias(f"{v_}__{pr}")
-                                for pr in prs_
-                            ],
-                        ),
-                        v_,
-                        "left",
-                    )
+            for v_ in {v for v, _ in _needed}:
+                prs_ = sorted(pr for vv, pr in _needed if vv == v_)
+                df = _attach_props(df, v_, prs_, labels0.get(v_))
             df = df.withColumn(
                 u["var"],
                 F.explode(
@@ -8121,27 +8151,11 @@ def _run_single(
         if _c["stage"] == 0:
             df = _apply_call(df, _c)
 
-    # node-property access: equi-join the attribute view per referenced var
-    # (label-pruned when the var carries a pattern label — the equality on
-    # the per-branch literal folds, so the join's build side scans one
-    # base table, not the whole four-tier union)
-    if p["prop_vars"]:
-        attrs = _attr_view()
-        for var, props in p["prop_vars"].items():
-            # node-only cross-join chains pre-attach their prop columns in
-            # the clause frame (round-12 — so per-side predicates prune
-            # BELOW the cross); join only what is still missing
-            need = [pr for pr in props if f"{var}__{pr}" not in df.columns]
-            if not need:
-                continue
-            side = attrs
-            lab = p["labels"].get(var)
-            if lab:
-                side = side.filter(F.col("label") == lab)
-            sel = [_attr_id_col(var)] + [
-                F.col(pr).alias(f"{var}__{pr}") for pr in need
-            ]
-            df = df.join(side.select(*sel), var, "left")
+    # node-property access: attach what the node frames did not already
+    # carry (see _attach_props), label-pruned by the pattern label or the
+    # one the variable's typed segments imply
+    for var, props in p["prop_vars"].items():
+        df = _attach_props(df, var, props, labels0.get(var))
 
     # EXISTS flag columns (round-10 — OR-connected / expression-embedded
     # EXISTS): left-join distinct anchors carrying literal TRUE, coalesce
@@ -8435,7 +8449,7 @@ def _run_single(
             )
         for clause in pipe["clauses"]:
             _pre_cols = set(df.columns)
-            cframe = _clause_frame(clause, None)
+            cframe = _clause_frame(clause, None, pipe["prop_vars"])
             for lvar, label in clause.get("labels", {}).items():
                 if numeric:
                     cframe = cframe.filter(
@@ -8453,41 +8467,23 @@ def _run_single(
                 # the conjunct keys (a plain shuffled hash join; the
                 # attr-view sides prune by label, and no cross join ever
                 # materializes — scale-safe on unbounded piped frames)
-                attrs_pj = _attr_view()
                 conds = []
                 for lvar, lprop, ref in clause["propjoin"]:
                     lcol = lvar if lprop == "id" else f"{lvar}__{lprop}"
-                    if lcol not in cframe.columns:
-                        side = attrs_pj
-                        lab = clause.get("labels", {}).get(lvar)
-                        if lab:
-                            side = side.filter(F.col("label") == lab)
-                        cframe = cframe.join(
-                            side.select(
-                                F.col("id_n" if numeric else "id").alias(lvar),
-                                F.col(lprop).alias(lcol),
-                            ),
+                    if lprop != "id":
+                        cframe = _attach_props(
+                            cframe,
                             lvar,
-                            "left",
+                            [lprop],
+                            clause.get("labels", {}).get(lvar),
+                            num=numeric,
                         )
                     rvar, _, rprop = ref.partition(".")
                     if not rprop or rprop == "id":
                         rcol = rvar  # a piped column / node id directly
                     else:
                         rcol = f"{rvar}__{rprop}"
-                        if rcol not in df.columns:
-                            side = attrs_pj
-                            lab = p["labels"].get(rvar)
-                            if lab:
-                                side = side.filter(F.col("label") == lab)
-                            df = df.join(
-                                side.select(
-                                    _attr_id_col(rvar),
-                                    F.col(rprop).alias(rcol),
-                                ),
-                                rvar,
-                                "left",
-                            )
+                        df = _attach_props(df, rvar, [rprop], p["labels"].get(rvar))
                     # align the id-value representations across the equi-join
                     # condition: an encoded-long side comparing against a
                     # string/natural value decodes in place (id semantics are
@@ -8518,22 +8514,10 @@ def _run_single(
             df = _join_clause(df, cframe, clause, num_vars, numeric)
             if numeric:
                 num_vars.update(set(clause["vars"]) - _pre_cols)
-        if pipe["prop_vars"]:
-            attrs = _attr_view()
-            for var, props in pipe["prop_vars"].items():
-                need = [
-                    pr for pr in props if f"{var}__{pr}" not in df.columns
-                ]  # cross-chain frames pre-attach theirs (round-12)
-                if not need:
-                    continue
-                side = attrs
-                lab = p["labels"].get(var)
-                if lab:  # label pruning — see the node-only clause note
-                    side = side.filter(F.col("label") == lab)
-                sel = [_attr_id_col(var)] + [
-                    F.col(pr).alias(f"{var}__{pr}") for pr in need
-                ]
-                df = df.join(side.select(*sel), var, "left")
+        pipe_labels = _implied_labels(pipe["clauses"])
+        for var, props in pipe["prop_vars"].items():
+            lab = p["labels"].get(var) or pipe_labels.get(var)
+            df = _attach_props(df, var, props, lab)
         if pipe["post_pred"]:
             df = df.filter(
                 F.expr(

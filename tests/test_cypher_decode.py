@@ -19,3 +19,12 @@ def test_escaped_quote_literal_is_untouched():
 def test_label_prefix_and_plain_literal():
     got = _decode_vars_sql("a LIKE 'c:%' AND b = 'a'", {"a", "b"})
     assert got == f"(shiftright(a, 48) = 0) AND {decode_id_sql('b')} = 'a'"
+
+
+def test_escaped_backslash_closes_literal():
+    # '...\\' ends in an escaped backslash, so the quote after it closes
+    # the literal: a scanner that read \' there as an escaped quote would
+    # run the literal on and leave the "a" after it undecoded
+    literal = r"'x\\'"
+    got = _decode_vars_sql(f"{literal} = a", {"a"})
+    assert got == f"{literal} = {decode_id_sql('a')}"

@@ -6,10 +6,26 @@ A plan regression here is a 100 TB performance bug even when results match.
 
 from __future__ import annotations
 
+import re
+
+from mimranalytics_core_spark import api
 from mimranalytics_core_spark.registry import all_ops
 from tests.conftest import SF_SMALL
 
 OPS = all_ops()
+
+
+def _aggregates(plan: str) -> list[str]:
+    """The plan's aggregate nodes, hash-, object-hash- or sort-based."""
+    return [
+        ln for ln in plan.splitlines()
+        if re.search(r"\b(?:Hash|ObjectHash|Sort)Aggregate\(", ln)
+    ]
+
+
+def _cypher_plan(spark, query: str) -> str:
+    df = api.cypher(spark, SF_SMALL, query)
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def _plan(spark, name: str, execute: bool = False) -> str:
@@ -373,7 +389,11 @@ def test_expr_aggregate_pre_columns_stay_in_agg_child(spark):
     is the only extra exchange vs the plain-argument form."""
     plan = _plan(spark, "cypher_expr_aggregates")
     assert "__pag" in plan  # the pre-aggregation projection is in-plan
-    assert plan.count("HashAggregate") >= 2  # partial+final
+    # the op's own partial and final aggregate on n.name, of any kind (the
+    # multi-distinct form plans as SortAggregate)
+    own = [ln for ln in _aggregates(plan) if re.search(r"keys?=\[n__name", ln)]
+    assert any("partial_" in ln for ln in own), plan
+    assert any("partial_" not in ln and "merge_" not in ln for ln in own), plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
 
@@ -383,8 +403,8 @@ def test_postagg_projection_runs_over_grouped_frame(spark):
     be a Project ABOVE the final aggregate (rows = |groups|), never a
     re-aggregation or a join back to the input."""
     plan = _plan(spark, "cypher_agg_expression")
-    # partial+final for the query's grouping (the hierarchy edge-weight
-    # normalization contributes its own pair upstream)
+    # partial+final for the query's grouping (the traversal reads no edge
+    # weight, so it plans no aggregate of its own)
     assert plan.count("HashAggregate") >= 2
     # Catalyst COLLAPSES the post-agg projection into the aggregate
     # itself (the hidden __hag aliases are pruned away) — the output
@@ -509,3 +529,47 @@ def test_business_rollup_plan_shape(spark):
     # several orders scans exist (the PLACED edge frame + the attribute
     # side); the year filter must sit on at least one, pre-join
     assert scan and any("year" in ln for ln in scan)
+
+
+# Node-property fusion: a node's label and properties come from a scan the
+# plan already has, never from joining the attribute view back in.
+
+
+def test_labeled_node_only_clause_scans_its_table_once(spark):
+    """A node-only clause attaches the properties it reads in its node
+    scan: one customer scan, no self-join on c_custkey."""
+    plan = _cypher_plan(
+        spark,
+        """MATCH (c:Customer) WHERE c.acctbal > 0 AND c.nationkey = 3
+           RETURN c.custkey AS ck, c.name AS name ORDER BY ck LIMIT 5""",
+    )
+    assert plan.count("customer.parquet") == 1, plan
+    assert "Join" not in plan, plan
+
+
+def test_weightless_traversal_drops_the_nation_share_aggregate(spark):
+    """The nation totals behind customer_of weights join LEFT on a key the
+    aggregate is distinct on, so a traversal that reads no weight plans no
+    aggregate on c_nationkey; a weighted one keeps the partial aggregate
+    and its broadcast."""
+    bare = _cypher_plan(
+        spark, "MATCH (c:Customer)-[:CUSTOMER_OF]->(n) RETURN c AS c, n AS n"
+    )
+    assert not any("c_nationkey" in ln for ln in _aggregates(bare)), bare
+    weighted = _cypher_plan(
+        spark,
+        "MATCH (c:Customer)-[r:CUSTOMER_OF]->(n) RETURN c AS c, r.weight AS w",
+    )
+    shares = [ln for ln in _aggregates(weighted) if "c_nationkey" in ln]
+    assert any("partial_sum" in ln for ln in shares), weighted
+    assert "BroadcastHashJoin" in weighted and "BroadcastExchange" in weighted
+
+
+def test_tier_implied_label_prunes_the_attribute_join(spark):
+    """r in (n)-[:NATION_OF]->(r) is a Region, so r.name joins the region
+    table alone instead of the four-tier attribute union."""
+    plan = _cypher_plan(
+        spark, "MATCH (n:Nation)-[:NATION_OF]->(r) RETURN n AS n, r.name AS name"
+    )
+    assert plan.count("region.parquet") == 1, plan
+    assert "customer.parquet" not in plan and "supplier.parquet" not in plan, plan

@@ -108,30 +108,34 @@ def test_property_map_optional_null_extends(spark):
 
 def test_property_map_pushes_below_first_join(spark):
     """An id map on the start variable must reach the scan side — the
-    equality filter sits BELOW the first join in the physical plan."""
+    equality filter sits BELOW every join in the physical plan."""
     import contextlib
     import io
+    import re as _re
 
     from mimranalytics_core_spark import api
 
-    df = api.cypher(
-        spark, SF_SMALL, "MATCH (c {id: 'c:42'})-[:CUSTOMER_OF]->(n) RETURN c, n"
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode="formatted")
-    plan = buf.getvalue()
-    import re as _re
-
-    # operator ids number leaves-first: a Filter BELOW a join has a
-    # smaller id than the join. Split the detail dump into (id, body)
-    # sections; the filter carrying the literal must sit under every join.
-    sections = _re.split(r"\n\((\d+)\) ", "\n" + plan)
-    ops = list(zip(sections[1::2], sections[2::2]))  # (id, "Name\n...body")
-    filt_ids = [int(i) for i, b in ops if b.startswith("Filter") and "c:42" in b]
-    join_ids = [int(i) for i, b in ops if "Join" in b.split("\n", 1)[0]]
-    assert filt_ids and join_ids, plan
-    assert min(filt_ids) < min(join_ids), plan
+    for query, joins in (
+        # a weightless traversal plans no join at all (the nation-share
+        # aggregate behind customer_of weights is eliminated)
+        ("MATCH (c {id: 'c:42'})-[:CUSTOMER_OF]->(n) RETURN c, n", False),
+        # n.name joins the nation table: the filter stays below that join
+        ("MATCH (c {id: 'c:42'})-[:CUSTOMER_OF]->(n) RETURN c, n.name AS nn", True),
+    ):
+        df = api.cypher(spark, SF_SMALL, query)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain(mode="formatted")
+        plan = buf.getvalue()
+        # operator ids number leaves-first: a Filter BELOW a join has a
+        # smaller id than the join. Split the detail dump into (id, body)
+        # sections; the filter carrying the literal must sit under every join.
+        sections = _re.split(r"\n\((\d+)\) ", "\n" + plan)
+        ops = list(zip(sections[1::2], sections[2::2]))  # (id, "Name\n...body")
+        filt_ids = [int(i) for i, b in ops if b.startswith("Filter") and "c:42" in b]
+        join_ids = [int(i) for i, b in ops if "Join" in b.split("\n", 1)[0]]
+        assert filt_ids and bool(join_ids) == joins, plan
+        assert all(min(filt_ids) < j for j in join_ids), plan
 
 
 def test_property_map_after_with_stage(spark):

@@ -5,9 +5,10 @@
 Builds a hierarchy-shaped synthetic edge list of exactly ``--edges`` edges
 (customers and suppliers → 25 nations → 5 regions, customer weights
 normalised per nation), then for each kernel of
-``functions/graph_kernels.py`` prints its wall time and ``tracemalloc``
-peak, and with ``--spark 1`` the wall time of the Spark function it
-stands in for on the same edges (each forced to completion by a count).
+``functions/graph_kernels.py`` prints its wall time (an untraced call)
+and ``tracemalloc`` peak (a second, traced call), and with ``--spark 1``
+the wall time of the Spark function it stands in for on the same edges
+(each forced to completion by a count).
 The last rows are a bound-id seek: ``SeekGraph.distances`` against Spark
 ``multi_source_distances`` from 16 customers at 3 hops, and the same seek
 held to ``graph_snapshot.MAX_PATH_ROWS``, which it exceeds: the kernel's
@@ -56,10 +57,14 @@ def synthetic(n_edges: int, seed: int = 0) -> pa.Table:
 
 
 def measure(fn):
-    tracemalloc.start()
+    """(wall s, peak MiB): the wall from an untraced call, the peak from a
+    second, traced one, since ``tracemalloc`` slows allocation-heavy
+    kernels unevenly and would misrank their walls."""
     t0 = time.perf_counter()
     fn()
     wall = time.perf_counter() - t0
+    tracemalloc.start()
+    fn()
     peak = tracemalloc.get_traced_memory()[1]
     tracemalloc.stop()
     return round(wall, 3), round(peak / 2**20, 1)
