@@ -135,10 +135,10 @@ def test_call_rejections_are_targeted(spark, query, frag):
 def test_split_items_tracks_brace_depth():
     # r8 ADVICE (low): a comma inside an EXISTS { …, … } item body used to
     # split the item and fail with a misleading error
-    from mimranalytics_core_spark.cypher import _split_items
+    from mimranalytics_core_spark.cypher import _split_top
 
-    items = _split_items(
-        "n, EXISTS { (a)-[:X]->(n), (b)-[:Y]->(n) } AS both, count(*) AS c"
+    items = _split_top(
+        "n, EXISTS { (a)-[:X]->(n), (b)-[:Y]->(n) } AS both, count(*) AS c", ","
     )
     assert len(items) == 3
     assert items[1].strip().startswith("EXISTS")

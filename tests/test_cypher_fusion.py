@@ -72,6 +72,22 @@ CASES = [
              ON s.s_acctbal > $bal AND s.s_nationkey = $nk""",
         lambda r: {"bal": round(r.uniform(-1000, 9000), 2), "nk": r.randrange(25)},
     ),
+    # a label on an already-bound variable in an OPTIONAL clause filters
+    # that clause only: n stays bound to its nation on the null-extended
+    # rows, so its properties read the nation either way
+    *(
+        (
+            f"optional_relabel_{label.lower()}",
+            f"""MATCH (c:Customer)-[:CUSTOMER_OF]->(n) WHERE c.custkey = $ck
+               OPTIONAL MATCH (n:{label})
+               RETURN n.name AS name, n.nationkey AS nk""",
+            """SELECT n.n_name AS name, n.n_nationkey AS nk
+               FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
+               WHERE c.c_custkey = $ck""",
+            lambda r: {"ck": r.randrange(150)},
+        )
+        for label in ("Region", "Nation")
+    ),
 ]
 
 

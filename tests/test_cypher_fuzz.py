@@ -28,7 +28,11 @@ def _node(draw, var):
                              "{id: 'c:1', name: 'X Y'}",
                              # round-12: typed natural-key literals
                              "{custkey: 1}", "{nationkey: 3}",
-                             "{orderstatus: 'O'}", "{acctbal: 100.5}"])
+                             "{orderstatus: 'O'}", "{acctbal: 100.5}",
+                             # literals holding brackets, separators and
+                             # clause keywords stay data to every scanner
+                             "{name: 'a (b) [c] {d}, e | f'}",
+                             "{name: 'x AND y WHERE z RETURN w'}"])
         )
     return f"({var}{label}{pmap})"
 
@@ -166,6 +170,8 @@ def _query(draw):
                     "{v}.id STARTS WITH 'c:' XOR {v}.id ENDS WITH '1'",
                     "{v}.id STARTS WITH 'c:' XOR "
                     "({v}.id CONTAINS '1' AND {v}.id CONTAINS '2')",
+                    "{v}.id CONTAINS '(x], {{y}} | z' "
+                    "OR {v}.id = 'a AND b WHERE c RETURN d'",
                 ]
             )
         ).format(v=vs[0])
@@ -298,6 +304,7 @@ def _query(draw):
                         "[10, 20, 30, 40][1..3][0] AS le13",
                         "['a', 'b', 'c'][-2..][0] AS le14",
                         "size([1, 2, 3][..2]) AS le15",
+                        "'( ) [ ] { } , |' + ' AND WHERE RETURN' AS le16",
                     ]
                 )
             )

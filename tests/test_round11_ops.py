@@ -676,9 +676,9 @@ def test_xor_chain_is_parity(spark):
 
 
 def test_xor_inside_case_untouched():
-    from mimranalytics_core_spark.cypher import _split_top_word
+    from mimranalytics_core_spark.cypher import _split_top
 
-    parts = _split_top_word("CASE WHEN a XOR b THEN 1 END", "XOR")
+    parts = _split_top("CASE WHEN a XOR b THEN 1 END", r"\bXOR\b")
     assert len(parts) == 1  # the CASE..END span shields its body
 
 

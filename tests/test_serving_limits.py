@@ -122,3 +122,25 @@ def test_explain_bad_param_value_is_400(server):
     # the same query with a castable value still answers
     ok = dict(_BAD_CAST_PARAMS, min_bal="100.5")
     assert "Physical Plan" in _get(server, "/explain", q=_BAD_CAST_Q, params=json.dumps(ok))["plan"]
+
+
+_UNTERMINATED = {
+    "where": "MATCH (c:Customer) WHERE c.name = 'Customer#1 RETURN c.name AS n",
+    "return_item": "MATCH (c:Customer) RETURN 'abc AS x",
+    "property_map": "MATCH (c:Customer {name: 'Customer#1}) RETURN c.name AS n",
+    "call_body": (
+        "MATCH (c:Customer) CALL { MATCH (n:Nation) WHERE n.name = 'X "
+        "RETURN n } RETURN c.name AS n"
+    ),
+}
+
+
+@pytest.mark.parametrize("q", _UNTERMINATED.values(), ids=_UNTERMINATED.keys())
+def test_unterminated_literal_is_a_syntax_error_and_400(server, q):
+    from mimranalytics_core_spark.cypher import CypherSyntaxError, parse
+
+    offset = q.rfind("'")
+    with pytest.raises(CypherSyntaxError, match=f"unterminated string literal at offset {offset}"):
+        parse(q)
+    code, err = _status(lambda: _post(server, "/cypher", {"q": q}))
+    assert code == 400 and f"unterminated string literal at offset {offset}" in err

@@ -1,4 +1,4 @@
-"""Per-template compile time, execute time and Spark jobs of the interactive Cypher templates.
+"""Per-template parse time, compile time, execute time and Spark jobs of the interactive Cypher templates.
 
     python tools/cypher_probe.py [--reps 4]
 
@@ -8,9 +8,11 @@ DataFrame (compile), then ``limit(1000).collect()`` runs it (execute).
 One warm-up call per template precedes the ``--reps`` timed calls; each
 call draws its parameters from the template's generator with the rep
 index as seed. Jobs are counted per call through a job group and
-``statusTracker``. Prints one line per template (median compile ms,
-median execute ms, median jobs per call) and a JSON object on the last
-line.
+``statusTracker``. Parse time is the pure-Python ``cypher.parse`` of the
+template's bound text, timed over ``PARSE_CALLS`` calls with seeds
+0, 1, …. Prints one line per template (median parse ms, median compile
+ms, median execute ms, median jobs per call) and a JSON object on the
+last line.
 
 The dataset is perfbench's fixed one (written under ``.perfbench/`` on
 first use). The engine runs ``local[N]`` with N = half the CPUs, as perfbench does; set
@@ -35,6 +37,23 @@ import interactive  # noqa: E402
 import program  # noqa: E402
 
 
+PARSE_CALLS = 30
+
+
+def parse_ms(name: str) -> float:
+    """Median ms of ``cypher.parse`` on the template's bound text."""
+    from mimranalytics_core_spark import cypher
+
+    _, query, _, gen = interactive.TEMPLATE_BY_NAME[name]
+    times = []
+    for seed in range(PARSE_CALLS):
+        bound = cypher.bind_params(query, gen(random.Random(seed)))
+        t0 = time.perf_counter()
+        cypher.parse(bound)
+        times.append((time.perf_counter() - t0) * 1e3)
+    return round(statistics.median(times), 3)
+
+
 def probe(spark, data_dir: str, name: str, reps: int) -> dict:
     from mimranalytics_core_spark import api
 
@@ -57,6 +76,7 @@ def probe(spark, data_dir: str, name: str, reps: int) -> dict:
             execute_ms.append((t2 - t1) * 1e3)
             jobs.append(len(tracker.getJobIdsForGroup(group)))
     return {
+        "parse_ms": parse_ms(name),
         "compile_ms": round(statistics.median(compile_ms), 1),
         "execute_ms": round(statistics.median(execute_ms), 1),
         "jobs": statistics.median(jobs),
@@ -75,7 +95,8 @@ def main() -> None:
         for name, *_ in interactive.TEMPLATES:
             r = out[name] = probe(spark, data_dir, name, args.reps)
             print(
-                f"{name:24s} compile {r['compile_ms']:7.1f} ms  "
+                f"{name:24s} parse {r['parse_ms']:6.2f} ms  "
+                f"compile {r['compile_ms']:7.1f} ms  "
                 f"execute {r['execute_ms']:7.1f} ms  jobs {r['jobs']:g}",
                 flush=True,
             )
